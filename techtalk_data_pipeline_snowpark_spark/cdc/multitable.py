@@ -48,15 +48,34 @@ Design, and why it scales:
   the slice otherwise). Dedup/merge work is per-table and identical to
   T independent engines — hot-repo salting, winner broadcast, bucket/
   bloom pruning all apply unchanged.
+- **Parallel fan-out.** The T applies of one epoch run at the same time
+  on a pool of P = min(T, ``defaultParallelism``) threads, so epoch wall
+  time is about ⌈T/P⌉ waves, each as long as its slowest apply — not the
+  sum of all T. One table-epoch of a few thousand events keeps only a
+  fraction of the task slots busy (about 28% of 2 slots on the ``fanout``
+  benchmark), and overlapping applies fills the rest. P stops at the slot
+  count because more applies than slots only contend. On ``fanout``
+  (4 routes, ``local[2]`` on a 4-core host) the 2-wide pool replayed a
+  median 58% more events/s than the serial loop over 10 interleaved
+  pairs, with lower commit lag in every pair; a 4-wide pool was slower
+  than the 2-wide one on every seed tried and gave mixed commit lag,
+  since all four tables then contend and commit together at the end of
+  the epoch. Every apply
+  of epoch k returns before epoch k+1 starts, so the skip, the shared
+  epoch boundaries and each table's result order are the serial ones.
+  Callables passed in a route's ``engine_kwargs`` (``audit_fn``) run on
+  the pool's worker threads.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .engine import CdcEngine, EpochResult
 
@@ -165,6 +184,68 @@ class MultiTableCdcEngine:
         )
 
     # ------------------------------------------------------------- replay
+    def _apply_routes(
+        self,
+        events: DataFrame,
+        lo: int,
+        hi: int,
+        lineage: dict | None,
+        marks: dict[str, tuple[int, int]] | None = None,
+    ) -> dict[str, EpochResult]:
+        """Apply the epoch ``(lo, hi]`` to every route at once — the one
+        fan-out :meth:`replay` and ``stream_replay_multitable`` share.
+
+        ``marks`` maps a table to the (watermark, epoch id) the caller last
+        saw: a table already at or past ``hi`` gets a driver-side skip (no
+        slice planned, no snapshot loaded), and each applied table's entry
+        advances. Without ``marks`` every route applies and
+        ``apply_epoch``'s own watermark check skips.
+
+        The applies run on min(applying routes, defaultParallelism)
+        threads (see the module docstring) and all return before this
+        does. Each worker inherits the caller's JVM local properties (job
+        group, scheduler pool, streaming and SQL-execution ids). A failing
+        apply behaves like a crash between tables: routes not yet started
+        never start, those in flight finish (their commits stand), the
+        first failure in route order is re-raised, and no worker thread
+        outlives the call."""
+        results: dict[str, EpochResult] = {}
+        todo: dict[str, DataFrame] = {}
+        for name in self.engines:
+            if marks is not None and marks[name][0] >= hi:
+                results[name] = EpochResult(
+                    marks[name][1], lo, hi, 0, 0, 0, 0, skipped=True
+                )
+            else:
+                todo[name] = self.routed(events, name)
+        if not todo:
+            return results
+        width = min(len(todo), self.spark.sparkContext.defaultParallelism)
+        pool = ThreadPoolExecutor(width, thread_name_prefix="cdc-fanout")
+        try:
+            futures = {
+                name: pool.submit(
+                    # wrapped per route: each worker gets its own copy of
+                    # the caller's local properties, not a shared one
+                    inheritable_thread_target(self.spark)(
+                        self.engines[name].apply_epoch
+                    ),
+                    sub, lo, hi, lineage={**(lineage or {}), "table": name},
+                )
+                for name, sub in todo.items()
+            }
+            wait(futures.values(), return_when=FIRST_EXCEPTION)
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
+        for f in futures.values():
+            if not f.cancelled() and f.exception() is not None:
+                raise f.exception()
+        for name, f in futures.items():
+            results[name] = f.result()
+            if marks is not None:
+                marks[name] = (hi, results[name].epoch_id)
+        return {n: results[n] for n in self.engines}
+
     def replay(
         self,
         events: DataFrame,
@@ -175,7 +256,17 @@ class MultiTableCdcEngine:
         """Replay the shared log into every routed table, resuming each
         from its own watermark. Returns per-table epoch results (skips
         included, so a resumed run shows exactly which table re-applied
-        which epoch)."""
+        which epoch).
+
+        Within an epoch the routed tables apply concurrently on
+        min(T, defaultParallelism) threads, so an epoch takes about
+        ⌈T/P⌉ waves of applies rather than the sum of T (the module
+        docstring gives the measurement behind P); epochs still run one
+        after another. Callables in a route's ``engine_kwargs`` (such as
+        ``audit_fn``) run on those worker threads. If an apply raises,
+        the applies of that epoch already in flight finish, the error
+        propagates, and tables that committed keep their commit — a
+        resumed replay skips them."""
         if epoch_size <= 0:
             raise ValueError(
                 f"epoch_size must be positive, got {epoch_size} — a "
@@ -183,33 +274,18 @@ class MultiTableCdcEngine:
             )
         if max_lsn is None:
             max_lsn = events.agg(F.max("lsn")).first()[0] or 0
-        marks = self.last_lsns()
         # epoch ids read ONCE per table (a snapshot load each) — the
-        # driver-side skip below must not pay an O(retained log) snapshot
-        # replay per skipped epoch (bootstrap of a new route skips every
+        # driver-side skip must not pay an O(retained log) snapshot replay
+        # per skipped epoch (bootstrap of a new route skips every
         # already-applied epoch for every existing table)
-        eids = {n: e.last_epoch_id() for n, e in self.engines.items()}
-        cur = min(marks.values())
+        marks = {
+            n: (e.last_lsn(), e.last_epoch_id()) for n, e in self.engines.items()
+        }
+        cur = min(m for m, _ in marks.values())
         results: dict[str, list[EpochResult]] = {n: [] for n in self.engines}
         while cur < max_lsn:
             hi = min(cur + epoch_size, max_lsn)
-            for name, eng in self.engines.items():
-                if marks[name] >= hi:
-                    # cheap driver-side skip — apply_epoch would conclude
-                    # the same from the watermark, but without this it
-                    # still plans a slice frame per table per epoch
-                    results[name].append(
-                        EpochResult(eids[name], cur, hi, 0, 0, 0, 0, skipped=True)
-                    )
-                    continue
-                res = eng.apply_epoch(
-                    self.routed(events, name),
-                    cur,
-                    hi,
-                    lineage={**(lineage or {}), "table": name},
-                )
-                marks[name] = hi
-                eids[name] = res.epoch_id
+            for name, res in self._apply_routes(events, cur, hi, lineage, marks).items():
                 results[name].append(res)
             cur = hi
         return results

@@ -202,6 +202,17 @@ def stream_replay_multitable(
     route fails the batch before any table applies it (all watermarks
     still agree on epoch boundaries, so no partial ordering damage).
 
+    The tables apply the batch concurrently through the same fan-out as
+    the batch path (``MultiTableCdcEngine._apply_routes``): min(T,
+    defaultParallelism) worker threads, so a batch takes about ⌈T/P⌉
+    waves of applies rather than the sum of T, and every apply returns
+    before the next batch. The workers inherit the ``foreachBatch``
+    thread's JVM local properties (the query's job group and SQL
+    execution); callables in a route's ``engine_kwargs`` (``audit_fn``)
+    run on them. A failing apply fails the batch after the batch's other
+    in-flight applies finish; the checkpoint redelivers it and the tables
+    that committed skip.
+
     Scale note: the routed frames are filters over the micro-batch's file
     list — each table's epoch reads the batch predicate- and
     column-pruned, the same posture as the batch fan-out (no persist of
@@ -219,17 +230,12 @@ def stream_replay_multitable(
             F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
         ).first()
         lo, hi = int(lo), int(hi)
-        for name, eng in mt.engines.items():
+        for eng in mt.engines.values():
             _check_batch_ordering(eng, lo, hi, batch_id)
-        for name, eng in mt.engines.items():
-            eng.apply_epoch(
-                mt.routed(batch_df, name), lo - 1, hi,
-                lineage={
-                    "streaming_batch_id": batch_id,
-                    "source_dir": events_dir,
-                    "table": name,
-                },
-            )
+        mt._apply_routes(
+            batch_df, lo - 1, hi,
+            {"streaming_batch_id": batch_id, "source_dir": events_dir},
+        )
 
     writer = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -4,6 +4,9 @@ exactly-once watermark. The reference runs one stream per table
 (IngestOrdersFromRawToFlat.scala / IngestRatingsFromRawToFlat.scala as
 separate DAG nodes); a real binlog tail gets ONE stream and must route."""
 
+import threading
+import time
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -94,9 +97,9 @@ def _users_oracle(spark):
     )
 
 
-def _files_oracle(spark, log):
+def _files_oracle(spark, log, tbl="files"):
     ev = (
-        log.where(F.col("tbl") == "files")
+        log.where(F.col("tbl") == tbl)
         .select("lsn", "op", "repo", "path", "commit", "lang", "content")
         .withColumn("ts", F.lit(0))
         .toPandas()
@@ -148,7 +151,9 @@ def test_exactly_once_rerun_is_noop(spark, tmp_path):
     mt.replay(log, epoch_size=1500)
     versions = {n: mt.engine(n).table().latest_version() for n in mt.engines}
     again = mt.replay(log, epoch_size=1500)
-    assert all(r.skipped for rs in again.values() for r in rs)
+    # every watermark is at the log's max LSN, so no epoch is left to
+    # schedule: no results at all, not even skips
+    assert again == {"files": [], "users": []}
     assert versions == {n: mt.engine(n).table().latest_version() for n in mt.engines}
 
 
@@ -175,6 +180,111 @@ def test_crash_between_tables_resumes_per_table(spark, tmp_path):
         got = got.sort_values(key).reset_index(drop=True)
         want = want.sort_values(key).reset_index(drop=True)
         pd.testing.assert_frame_equal(got[sorted(got.columns)], want[sorted(want.columns)])
+
+
+def _four_table_log(spark):
+    """The two-table log twice over: files/users on odd LSNs, and the same
+    events as files_b/users_b on even LSNs."""
+    log = _union_log(spark)
+    return log.withColumn("lsn", F.col("lsn") * 2 - 1).unionByName(
+        log.withColumn("lsn", F.col("lsn") * 2).withColumn(
+            "tbl", F.concat("tbl", F.lit("_b"))
+        )
+    )
+
+
+def _four_routes():
+    r = _routes()
+    return {**r, "files_b": r["files"], "users_b": r["users"]}
+
+
+def _assert_four_tables_exact(spark, mt, log):
+    cols = ["repo", "path", "commit", "lang", "content", "content_sha256", "lsn"]
+    for name in ("files", "files_b"):
+        got = (
+            mt.read_state(name).select(*cols).toPandas()
+            .sort_values(["repo", "path"]).reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(
+            got, _files_oracle(spark, log, name)[cols], check_dtype=False
+        )
+    for name, odd in (("users", 1), ("users_b", 0)):
+        got = (
+            mt.read_state(name).select("user_id", "event_type", "value", "lsn")
+            .toPandas().sort_values("user_id").reset_index(drop=True)
+        )
+        want = _users_oracle(spark)
+        want["lsn"] = want["lsn"] * 2 - odd
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_fanout_applies_tables_concurrently(spark, tmp_path):
+    """Every apply waits at a two-party barrier before it starts, so the
+    replay finishes only if two applies of the same epoch are in flight
+    together; a serial fan-out breaks the barrier on its first apply."""
+    log = _four_table_log(spark)
+    mt = MultiTableCdcEngine(spark, str(tmp_path / "mt"), _four_routes())
+    barrier = threading.Barrier(2, timeout=60)
+
+    def gated(apply_epoch):
+        def apply(*a, **kw):
+            barrier.wait()
+            return apply_epoch(*a, **kw)
+
+        return apply
+
+    for eng in mt.engines.values():
+        eng.apply_epoch = gated(eng.apply_epoch)
+    results = mt.replay(log, epoch_size=3000)
+    assert all(
+        len(rs) == 2 and not any(r.skipped for r in rs) for rs in results.values()
+    )
+    max_lsn = log.agg(F.max("lsn")).first()[0]
+    assert set(mt.last_lsns().values()) == {max_lsn}
+    _assert_four_tables_exact(spark, mt, log)
+
+
+def test_fanout_failure_stops_replay_and_resumes(spark, tmp_path):
+    """users and users_b fail in epoch 2 (users_b first in time, users
+    first in route order). The replay raises users' error, nothing is
+    committed past epoch 2, no worker thread survives, and a resumed
+    replay skips exactly the tables whose epoch-2 commit landed."""
+    log = _four_table_log(spark)
+    root = str(tmp_path / "mt")
+    epoch = 2000
+    mt = MultiTableCdcEngine(spark, root, _four_routes())
+    workers = set()
+
+    def faulty(name, apply_epoch):
+        def apply(events, lsn_from, lsn_to, **kw):
+            workers.add(threading.current_thread())
+            if lsn_from == epoch and name.startswith("users"):
+                if name == "users":
+                    time.sleep(0.5)
+                raise RuntimeError(f"injected failure in {name}")
+            return apply_epoch(events, lsn_from, lsn_to, **kw)
+
+        return apply
+
+    for name, eng in mt.engines.items():
+        eng.apply_epoch = faulty(name, eng.apply_epoch)
+    with pytest.raises(RuntimeError, match="injected failure in users$"):
+        mt.replay(log, epoch_size=epoch)
+    assert workers and threading.current_thread() not in workers
+    assert not any(t.is_alive() for t in workers)
+    marks = mt.last_lsns()
+    assert marks["users"] == marks["users_b"] == epoch
+    assert set(marks.values()) <= {epoch, 2 * epoch}
+    for eng in mt.engines.values():
+        assert max(m["lsn_to"] for m in eng.manifests()) <= 2 * epoch
+    committed = {n for n, m in marks.items() if m == 2 * epoch}
+
+    mt = MultiTableCdcEngine(spark, root, _four_routes())
+    results = mt.replay(log, epoch_size=epoch)
+    for name, rs in results.items():
+        assert [r.lsn_to for r in rs] == [2 * epoch, 3 * epoch - 2]
+        assert [r.skipped for r in rs] == [name in committed, False]
+    _assert_four_tables_exact(spark, mt, log)
 
 
 def test_new_route_bootstraps_without_rereading_existing(spark, tmp_path):
