@@ -40,7 +40,7 @@ from ..functions.text import (
     normalize_lang_sql,
     sha256_hex,
 )
-from ..lake import LakeTable, bucket_expr, merge_into
+from ..lake import ConcurrentCommitError, LakeTable, bucket_expr, merge_into
 from .dedup import (
     dedup_latest,
     dedup_latest_salted,
@@ -52,26 +52,6 @@ from .schema_evolution import reconcile
 ENGINE_COLS = {"op"}
 PROP_LAST_LSN = "cdc.last_lsn"
 PROP_EPOCH_ID = "cdc.epoch_id"
-
-_TIMING = bool(int(__import__("os").environ.get("SPARK_GRAFT_TIMING", "0")))
-
-
-class _Phase:
-    """Env-gated per-phase wall timer (SPARK_GRAFT_TIMING=1): prints one
-    line per apply_epoch phase so the serial per-epoch cost is visible."""
-
-    def __init__(self, epoch_id: int):
-        self.epoch_id = epoch_id
-        self.t = time.time()
-
-    def mark(self, name: str):
-        if _TIMING:
-            now = time.time()
-            print(f"[epoch {self.epoch_id}] {name}: {now - self.t:.2f}s", flush=True)
-            self.t = now
-        else:
-            self.t = time.time()
-
 
 @dataclass
 class EpochResult:
@@ -107,8 +87,7 @@ class CdcEngine:
         num_salts: int = 16,
         use_pandas_udfs: bool = True,
         broadcast_key_limit: int = 2_000_000,
-        mor_all_delete_epochs: bool = True,
-        all_delete_mode: str | None = None,
+        all_delete_mode: str = "mor",
         quarantine_dir: str | None = None,
         audit_fn=None,
         bloom: bool = False,
@@ -143,14 +122,9 @@ class CdcEngine:
         #                winner keys targeted, not rows proven live —
         #                final state is still exact (readers anti-join).
         #   "merge"    — copy-on-write MERGE (rewrites touched buckets).
-        # mor_all_delete_epochs=False is the back-compat spelling of
-        # all_delete_mode="merge".
-        if all_delete_mode is None:
-            all_delete_mode = "mor" if mor_all_delete_epochs else "merge"
         if all_delete_mode not in ("mor", "equality", "merge"):
             raise ValueError(f"unknown all_delete_mode {all_delete_mode!r}")
         self.all_delete_mode = all_delete_mode
-        self.mor_all_delete_epochs = all_delete_mode != "merge"
         # dead-letter channel: events whose key columns contain nulls (the
         # WAL contract requires a full key) are counted in every epoch's
         # manifest (null_key_winners, from the same stats pass — free) and,
@@ -176,11 +150,9 @@ class CdcEngine:
     def _create_properties(self) -> dict | None:
         if not self.bloom:
             return None
-        import json as _json
-
         from ..lake.bloom import PROP_BLOOM_COLS
 
-        return {PROP_BLOOM_COLS: _json.dumps(list(self.key_cols))}
+        return {PROP_BLOOM_COLS: json.dumps(list(self.key_cols))}
 
     # ------------------------------------------------------------- state
     def table(self) -> LakeTable:
@@ -189,15 +161,24 @@ class CdcEngine:
     def table_exists(self) -> bool:
         return self.table().exists()
 
+    def _mark(self) -> tuple[int, int]:
+        """(watermark, last epoch id), both from one snapshot load."""
+        table = self.table()
+        if not table.exists():
+            return 0, 0
+        props = table.snapshot().properties
+        return int(props.get(PROP_LAST_LSN, 0)), int(props.get(PROP_EPOCH_ID, 0))
+
     def last_lsn(self) -> int:
-        if not self.table_exists():
-            return 0
-        return int(self.table().snapshot().properties.get(PROP_LAST_LSN, 0))
+        return self._mark()[0]
 
     def last_epoch_id(self) -> int:
-        if not self.table_exists():
-            return 0
-        return int(self.table().snapshot().properties.get(PROP_EPOCH_ID, 0))
+        return self._mark()[1]
+
+    def _routes(self, events: DataFrame, lineage: dict | None) -> dict:
+        """This table as the only route of the epoch scheduler
+        (cdc/epochs.py): a single table is a one-route fan-out."""
+        return {self.table_root: (self, events, lineage)}
 
     # --------------------------------------------------------- transforms
     def _target_schema(self, events_schema: T.StructType) -> T.StructType:
@@ -274,15 +255,13 @@ class CdcEngine:
         unrelated, the epoch recomputes against the fresh snapshot. Staged
         files of a lost race are unreferenced orphans (vacuum cleans them).
         """
-        from ..lake import ConcurrentCommitError
-
         try:
             if self.audit_fn is not None:
                 return self._apply_epoch_wap(events, lsn_from, lsn_to, lineage)
             return self._apply_epoch_once(events, lsn_from, lsn_to, lineage)
         except ConcurrentCommitError:
-            if self.last_lsn() >= lsn_to:
-                epoch_id = self.last_epoch_id()
+            applied, epoch_id = self._mark()
+            if applied >= lsn_to:
                 return EpochResult(epoch_id, lsn_from, lsn_to, 0, 0, 0, 0, skipped=True)
             if _retries <= 0:
                 raise
@@ -324,8 +303,6 @@ class CdcEngine:
             sliced = events.where(
                 (F.col("lsn") > lsn_from) & (F.col("lsn") <= lsn_to)
             )
-            from ..lake import ConcurrentCommitError
-
             try:
                 LakeTable.create(
                     self.spark,
@@ -338,11 +315,10 @@ class CdcEngine:
             except (FileExistsError, ConcurrentCommitError):
                 pass  # competing replayer created it — adopt
         name = f"wap-epoch-{lsn_to}"
-        if self.last_lsn() >= lsn_to:
+        applied, epoch_id = self._mark()
+        if applied >= lsn_to:
             main.drop_branch(name)  # crash between publish and drop
-            return EpochResult(
-                self.last_epoch_id(), lsn_from, lsn_to, 0, 0, 0, 0, skipped=True
-            )
+            return EpochResult(epoch_id, lsn_from, lsn_to, 0, 0, 0, 0, skipped=True)
         main.drop_branch(name)  # crash before publish: re-fork fresh
         br = main.create_branch(name)
         res = self._apply_epoch_once(events, lsn_from, lsn_to, lineage, table=br)
@@ -377,7 +353,6 @@ class CdcEngine:
         table = table if table is not None else self.table()
         snap0 = table.snapshot() if table.exists() else None
         epoch_id = (int(snap0.properties.get(PROP_EPOCH_ID, 0)) if snap0 else 0) + 1
-        ph = _Phase(epoch_id)
         applied = int(snap0.properties.get(PROP_LAST_LSN, 0)) if snap0 else 0
         if applied >= lsn_to:
             return EpochResult(epoch_id - 1, lsn_from, lsn_to, 0, 0, 0, 0, skipped=True)
@@ -390,8 +365,6 @@ class CdcEngine:
         if snap0 is not None:
             evolved, added, widened = reconcile(snap0.schema, batch_target_schema, key_cols=list(self.key_cols))
         else:
-            from ..lake import ConcurrentCommitError
-
             try:
                 table = LakeTable.create(
                     self.spark,
@@ -441,18 +414,17 @@ class CdcEngine:
         from pyspark import StorageLevel
 
         winners = winners.persist(StorageLevel.MEMORY_AND_DISK)
-        ph.mark("setup+reconcile")
         try:
             return self._epoch_body(
                 table, snap0, winners, sliced, evolved, added, widened,
-                buckets_trusted, epoch_id, lsn_from, lsn_to, lineage, ph,
+                buckets_trusted, epoch_id, lsn_from, lsn_to, lineage,
             )
         finally:
             winners.unpersist()
 
     def _epoch_body(
         self, table, snap0, winners, sliced, evolved, added, widened,
-        buckets_trusted, epoch_id, lsn_from, lsn_to, lineage, ph,
+        buckets_trusted, epoch_id, lsn_from, lsn_to, lineage,
     ) -> EpochResult:
         # Null-key events violate the WAL contract (a change event without a
         # full key addresses nothing) — every equi-join in the pipeline
@@ -475,7 +447,6 @@ class CdcEngine:
             ).alias("n_null_del"),
         )
         stat_rows = stats.collect()
-        ph.mark("winner-stats-collect")
         n_null_winners = int(sum(r["n_null"] for r in stat_rows))
         # null-key winners never reach the merge (equi-joins can't match
         # them) — exclude them from the applied-event and delete counts so
@@ -498,7 +469,6 @@ class CdcEngine:
             sliced.where(null_key).write.mode("overwrite").parquet(
                 _os.path.join(self.quarantine_dir, f"epoch-{lsn_to}")
             )
-            ph.mark("quarantine-write")
 
         # Payload path: salted two-phase reduction for adversarial skew, or
         # the default winners semi-join (broadcast while the winner set is
@@ -518,7 +488,6 @@ class CdcEngine:
         # materialize as garbage all-null rows. Uniform in both modes.
         deduped_raw = deduped_raw.where(~null_key)
         dedup = self._transform(deduped_raw)
-        ph.mark("plan-build")
 
         if n_events == 0:
             res = table.commit_rewrite(
@@ -619,7 +588,6 @@ class CdcEngine:
                     broadcast=n_events <= self.broadcast_key_limit,
                 )
                 deleted = res.summary["rows_affected"]
-            ph.mark("mor-delete+commit")
             return EpochResult(
                 epoch_id, lsn_from, lsn_to, n_events, 0, 0, deleted,
             )
@@ -641,7 +609,6 @@ class CdcEngine:
             ),
             snap=snap_for_merge,
         )
-        ph.mark("merge+commit")
         return EpochResult(
             epoch_id, lsn_from, lsn_to, n_events,
             res.summary["rows_inserted"], res.summary["rows_updated"],
@@ -663,7 +630,8 @@ class CdcEngine:
     ) -> list[EpochResult]:
         """Replay the whole event log in epochs; resumes from the last
         committed epoch automatically (reads the manifest — SURVEY.md §4
-        item 4).
+        item 4). The epochs run through the epoch scheduler
+        (cdc/epochs.py) as a one-route fan-out, on its worker thread.
 
         ``compact_every=K`` runs table maintenance (``LakeTable.compact``:
         small-file consolidation + deletion-vector absorption) after every
@@ -694,11 +662,6 @@ class CdcEngine:
         exclusive with ``compact_every`` (pick inline or background) and
         with WAP (``audit_fn``): a main-table compact landing between a
         WAP fork and its publish would invalidate the publish rebase."""
-        if epoch_size <= 0:
-            raise ValueError(
-                f"epoch_size must be positive, got {epoch_size} — a "
-                "non-positive size would never advance the epoch loop"
-            )
         if background_compact_interval is not None:
             if background_compact_interval <= 0:
                 raise ValueError(
@@ -718,10 +681,11 @@ class CdcEngine:
                     "compact between fork and publish invalidates the "
                     "publish rebase — use compact_every (inline) instead"
                 )
-        if max_lsn is None:
-            max_lsn = events.agg(F.max("lsn")).first()[0] or 0
+        from .epochs import walk  # imports this module
 
-        from ..lake import ConcurrentCommitError
+        epochs = walk(
+            self.spark, events, self._routes(events, lineage), epoch_size, max_lsn
+        )
 
         def _compact_once(rebase: bool) -> int:
             """One maintenance pass with the replay's compact knobs —
@@ -767,16 +731,9 @@ class CdcEngine:
 
         try:
             results = []
-            cur = self.last_lsn()
-            applied = 0
-            while cur < max_lsn:
-                hi = min(cur + epoch_size, max_lsn)
-                results.append(
-                    self.apply_epoch(events, cur, hi, lineage=lineage)
-                )
-                cur = hi
-                applied += 1
-                if compact_every and applied % compact_every == 0:
+            for epoch in epochs:
+                results.extend(epoch.values())
+                if compact_every and len(results) % compact_every == 0:
                     try:
                         _compact_once(rebase=False)
                     except ConcurrentCommitError:

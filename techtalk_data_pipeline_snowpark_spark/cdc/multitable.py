@@ -23,16 +23,12 @@ Design, and why it scales:
   capture topic lands separately) turns the filter into partition
   pruning: per table, per epoch, only that table's files are opened.
 - **Per-table watermarks, one global epoch grid.** Each target table
-  records its own ``cdc.last_lsn``. :meth:`replay` drives all tables
-  over one epoch grid starting at the MINIMUM watermark;
-  ``CdcEngine.apply_epoch``'s idempotence (a table already at or past
-  ``lsn_to`` skips outright) makes per-table application exactly-once
-  even when a crash leaves tables at DIFFERENT watermarks — the resumed
-  epoch is a skip for tables that already committed it and a real apply
-  for the rest. Adding a NEW route later bootstraps it by the same
-  mechanism: the grid restarts at 0 for it while every existing table
-  skips through already-applied ranges without touching payload data
-  (the slice predicate is checked against the watermark BEFORE any scan).
+  records its own ``cdc.last_lsn``; :meth:`replay` drives all tables over
+  the epoch scheduler's shared grid from the MINIMUM watermark, so tables
+  left at different watermarks by a crash, or a route added later, resume
+  exactly-once (cdc/epochs.py). The slice predicate is checked against
+  the watermark before any scan, so a table skipping applied ranges
+  touches no payload data.
 - **No cross-table transaction — deliberately.** Like Iceberg/Delta, a
   commit is atomic per table. The global invariant is per-table
   prefix-consistency over one shared log: each table's state always
@@ -48,36 +44,23 @@ Design, and why it scales:
   the slice otherwise). Dedup/merge work is per-table and identical to
   T independent engines — hot-repo salting, winner broadcast, bucket/
   bloom pruning all apply unchanged.
-- **Parallel fan-out.** The T applies of one epoch run at the same time
-  on a pool of P = min(T, ``defaultParallelism``) threads, so epoch wall
-  time is about ⌈T/P⌉ waves, each as long as its slowest apply — not the
-  sum of all T. One table-epoch of a few thousand events keeps only a
-  fraction of the task slots busy (about 28% of 2 slots on the ``fanout``
-  benchmark), and overlapping applies fills the rest. P stops at the slot
-  count because more applies than slots only contend. On ``fanout``
-  (4 routes, ``local[2]`` on a 4-core host) the 2-wide pool replayed a
-  median 58% more events/s than the serial loop over 10 interleaved
-  pairs, with lower commit lag in every pair; a 4-wide pool was slower
-  than the 2-wide one on every seed tried and gave mixed commit lag,
-  since all four tables then contend and commit together at the end of
-  the epoch. Every apply
-  of epoch k returns before epoch k+1 starts, so the skip, the shared
-  epoch boundaries and each table's result order are the serial ones.
-  Callables passed in a route's ``engine_kwargs`` (``audit_fn``) run on
-  the pool's worker threads.
+- **Parallel fan-out.** Each table is one route of the epoch scheduler
+  (cdc/epochs.py), which applies an epoch's T tables concurrently on
+  min(T, ``defaultParallelism``) threads; its docstring gives the
+  measurement behind that width. Callables passed in a route's
+  ``engine_kwargs`` (``audit_fn``) run on the scheduler's worker threads.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.util import inheritable_thread_target
 
 from .engine import CdcEngine, EpochResult
+from .epochs import walk
 
 
 @dataclass
@@ -184,67 +167,13 @@ class MultiTableCdcEngine:
         )
 
     # ------------------------------------------------------------- replay
-    def _apply_routes(
-        self,
-        events: DataFrame,
-        lo: int,
-        hi: int,
-        lineage: dict | None,
-        marks: dict[str, tuple[int, int]] | None = None,
-    ) -> dict[str, EpochResult]:
-        """Apply the epoch ``(lo, hi]`` to every route at once — the one
-        fan-out :meth:`replay` and ``stream_replay_multitable`` share.
-
-        ``marks`` maps a table to the (watermark, epoch id) the caller last
-        saw: a table already at or past ``hi`` gets a driver-side skip (no
-        slice planned, no snapshot loaded), and each applied table's entry
-        advances. Without ``marks`` every route applies and
-        ``apply_epoch``'s own watermark check skips.
-
-        The applies run on min(applying routes, defaultParallelism)
-        threads (see the module docstring) and all return before this
-        does. Each worker inherits the caller's JVM local properties (job
-        group, scheduler pool, streaming and SQL-execution ids). A failing
-        apply behaves like a crash between tables: routes not yet started
-        never start, those in flight finish (their commits stand), the
-        first failure in route order is re-raised, and no worker thread
-        outlives the call."""
-        results: dict[str, EpochResult] = {}
-        todo: dict[str, DataFrame] = {}
-        for name in self.engines:
-            if marks is not None and marks[name][0] >= hi:
-                results[name] = EpochResult(
-                    marks[name][1], lo, hi, 0, 0, 0, 0, skipped=True
-                )
-            else:
-                todo[name] = self.routed(events, name)
-        if not todo:
-            return results
-        width = min(len(todo), self.spark.sparkContext.defaultParallelism)
-        pool = ThreadPoolExecutor(width, thread_name_prefix="cdc-fanout")
-        try:
-            futures = {
-                name: pool.submit(
-                    # wrapped per route: each worker gets its own copy of
-                    # the caller's local properties, not a shared one
-                    inheritable_thread_target(self.spark)(
-                        self.engines[name].apply_epoch
-                    ),
-                    sub, lo, hi, lineage={**(lineage or {}), "table": name},
-                )
-                for name, sub in todo.items()
-            }
-            wait(futures.values(), return_when=FIRST_EXCEPTION)
-        finally:
-            pool.shutdown(wait=True, cancel_futures=True)
-        for f in futures.values():
-            if not f.cancelled() and f.exception() is not None:
-                raise f.exception()
-        for name, f in futures.items():
-            results[name] = f.result()
-            if marks is not None:
-                marks[name] = (hi, results[name].epoch_id)
-        return {n: results[n] for n in self.engines}
+    def _routes(self, events: DataFrame, lineage: dict | None) -> dict:
+        """One epoch-scheduler route per table (cdc/epochs.py): its
+        routed sub-log, with the lineage tagged by the table's name."""
+        return {
+            name: (eng, self.routed(events, name), {**(lineage or {}), "table": name})
+            for name, eng in self.engines.items()
+        }
 
     def replay(
         self,
@@ -258,34 +187,15 @@ class MultiTableCdcEngine:
         included, so a resumed run shows exactly which table re-applied
         which epoch).
 
-        Within an epoch the routed tables apply concurrently on
-        min(T, defaultParallelism) threads, so an epoch takes about
-        ⌈T/P⌉ waves of applies rather than the sum of T (the module
-        docstring gives the measurement behind P); epochs still run one
-        after another. Callables in a route's ``engine_kwargs`` (such as
-        ``audit_fn``) run on those worker threads. If an apply raises,
-        the applies of that epoch already in flight finish, the error
-        propagates, and tables that committed keep their commit — a
-        resumed replay skips them."""
-        if epoch_size <= 0:
-            raise ValueError(
-                f"epoch_size must be positive, got {epoch_size} — a "
-                "non-positive size would never advance the epoch grid"
-            )
-        if max_lsn is None:
-            max_lsn = events.agg(F.max("lsn")).first()[0] or 0
-        # epoch ids read ONCE per table (a snapshot load each) — the
-        # driver-side skip must not pay an O(retained log) snapshot replay
-        # per skipped epoch (bootstrap of a new route skips every
-        # already-applied epoch for every existing table)
-        marks = {
-            n: (e.last_lsn(), e.last_epoch_id()) for n, e in self.engines.items()
-        }
-        cur = min(m for m, _ in marks.values())
+        The epochs run through the epoch scheduler (cdc/epochs.py): one
+        shared grid from the lowest watermark, an epoch's tables applied
+        concurrently, epochs one after another. If an apply raises, the
+        error propagates once that epoch's in-flight applies finish, and
+        tables that committed keep their commit — a resumed replay skips
+        them."""
         results: dict[str, list[EpochResult]] = {n: [] for n in self.engines}
-        while cur < max_lsn:
-            hi = min(cur + epoch_size, max_lsn)
-            for name, res in self._apply_routes(events, cur, hi, lineage, marks).items():
+        routes = self._routes(events, lineage)
+        for epoch in walk(self.spark, events, routes, epoch_size, max_lsn):
+            for name, res in epoch.items():
                 results[name].append(res)
-            cur = hi
         return results

@@ -10,7 +10,8 @@ Exactly-once composition: the file-source checkpoint gives at-least-once
 micro-batches; the engine's commit-epoch manifest makes re-application of
 an already-committed LSN range a no-op — so crash/restart anywhere yields
 exactly-once *effects* (same argument as SURVEY.md §2.11, now with the
-streaming runtime driving the loop instead of the replay driver).
+streaming runtime driving the loop instead of the replay driver). Both
+front-ends apply each batch as one epoch of the epoch scheduler (cdc/epochs.py).
 
 ``trigger(availableNow=True)`` drains the backlog then stops (the
 reference's per-tick semantics); ``processingTime`` keeps tailing.
@@ -30,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cdc.engine import CdcEngine
+from ..cdc.epochs import apply_routes
+
 
 class OrderingViolationError(RuntimeError):
     """A micro-batch's LSN range is at or below the engine watermark but no
@@ -122,6 +125,53 @@ def land_lsn_ordered(log, events_dir: str, waves: int = 4) -> int:
     return max_lsn
 
 
+def _stream(
+    spark: SparkSession,
+    events_dir: str,
+    checkpoint_dir: str,
+    owner,
+    schema: T.StructType,
+    available_now: bool,
+    processing_time: str,
+    max_files_per_trigger: int | None,
+):
+    """Start the file-source query whose every micro-batch is one epoch,
+    ``(min lsn - 1, max lsn]``, of ``owner``'s epoch-scheduler routes
+    (a ``CdcEngine`` or a ``MultiTableCdcEngine``)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+
+    def apply_batch(batch_df, batch_id: int):
+        # one job for the emptiness test and the batch's LSN range
+        n, lo, hi = batch_df.agg(
+            F.count(F.lit(1)), F.min("lsn"), F.max("lsn")
+        ).first()
+        if n == 0:
+            return
+        if lo is None:
+            raise ValueError(
+                f"batch {batch_id} has {n} events and none carries an lsn — "
+                "change events without an LSN cannot be ordered or applied"
+            )
+        routes = owner._routes(
+            batch_df, {"streaming_batch_id": batch_id, "source_dir": events_dir}
+        )
+        for engine, _, _ in routes.values():
+            _check_batch_ordering(engine, lo, hi, batch_id)
+        # the manifest makes a redelivered range a no-op
+        apply_routes(spark, routes, lo - 1, hi)
+
+    writer = reader.parquet(events_dir).writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 def stream_replay(
     spark: SparkSession,
     events_dir: str,
@@ -141,40 +191,16 @@ def stream_replay(
     files by MODIFICATION TIME (path breaks ties), so files must land with
     mtimes in LSN order — which is what a real WAL tail does (sequential
     appends). A parallel bulk write of pre-split ranges does NOT satisfy
-    this (part files get mtimes in task-completion order): a later range
+    this (part files get mtimes in task-COMPLETION order): a later range
     listed first would advance the engine watermark past an earlier range,
     and the earlier batch would be skipped as already-applied. Land ranges
     with sequential writes, or drain the whole backlog in one batch
     (``max_files_per_trigger=None``), where order inside the batch is
     irrelevant (the max-LSN dedup arbitrates)."""
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(events_dir)
-
-    def apply_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        lo, hi = batch_df.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).first()
-        lo, hi = int(lo), int(hi)
-        _check_batch_ordering(engine, lo, hi, batch_id)
-        # epoch = this batch's LSN range; the manifest makes replays no-ops.
-        engine.apply_epoch(
-            batch_df, lo - 1, hi,
-            lineage={"streaming_batch_id": batch_id, "source_dir": events_dir},
-        )
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _stream(
+        spark, events_dir, checkpoint_dir, engine, schema,
+        available_now, processing_time, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def stream_replay_multitable(
@@ -202,46 +228,16 @@ def stream_replay_multitable(
     route fails the batch before any table applies it (all watermarks
     still agree on epoch boundaries, so no partial ordering damage).
 
-    The tables apply the batch concurrently through the same fan-out as
-    the batch path (``MultiTableCdcEngine._apply_routes``): min(T,
-    defaultParallelism) worker threads, so a batch takes about ⌈T/P⌉
-    waves of applies rather than the sum of T, and every apply returns
-    before the next batch. The workers inherit the ``foreachBatch``
-    thread's JVM local properties (the query's job group and SQL
-    execution); callables in a route's ``engine_kwargs`` (``audit_fn``)
-    run on them. A failing apply fails the batch after the batch's other
-    in-flight applies finish; the checkpoint redelivers it and the tables
-    that committed skip.
+    The tables apply each batch concurrently through the epoch scheduler
+    (cdc/epochs.py). A failing apply fails the batch; the checkpoint
+    redelivers it and the tables that committed skip.
 
     Scale note: the routed frames are filters over the micro-batch's file
     list — each table's epoch reads the batch predicate- and
     column-pruned, the same posture as the batch fan-out (no persist of
     the raw batch; batches are bounded by ``maxFilesPerTrigger``).
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(events_dir)
-
-    def apply_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        lo, hi = batch_df.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).first()
-        lo, hi = int(lo), int(hi)
-        for eng in mt.engines.values():
-            _check_batch_ordering(eng, lo, hi, batch_id)
-        mt._apply_routes(
-            batch_df, lo - 1, hi,
-            {"streaming_batch_id": batch_id, "source_dir": events_dir},
-        )
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _stream(
+        spark, events_dir, checkpoint_dir, mt, schema,
+        available_now, processing_time, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

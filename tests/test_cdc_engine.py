@@ -393,13 +393,13 @@ def test_all_delete_epoch_uses_deletion_vectors(spark, tmp_path):
 
 
 def test_all_delete_epoch_cow_fallback_matches(spark, tmp_path):
-    """mor_all_delete_epochs=False keeps the old copy-on-write behavior and
+    """all_delete_mode="merge" keeps the old copy-on-write behavior and
     converges to the same state."""
     ev = change_events(spark, 300, n_repos=4, paths_per_repo=5, seed=3,
                        op_mix=(1.0, 0.0, 0.0))
     a = CdcEngine(spark, str(tmp_path / "mor"), num_buckets=4)
     b = CdcEngine(spark, str(tmp_path / "cow"), num_buckets=4,
-                  mor_all_delete_epochs=False)
+                  all_delete_mode="merge")
     for eng in (a, b):
         eng.replay(ev, epoch_size=10**9)
     live = [(r.repo, r.path) for r in a.read_state().select("repo", "path").collect()]
@@ -919,6 +919,37 @@ def test_wap_audit_failure_blocks_visibility(spark, tmp_path):
     _assert_state_equal(_final_state_pdf(engine), oracle)
     # replay after the publish: exactly-once skip, stale branch impossible
     assert engine.apply_epoch(ev, 0, 1000).skipped
+
+
+def test_replay_failing_mid_grid_stops_and_resumes(spark, tmp_path):
+    """replay with an audit that fails epoch 2: the audit error reaches
+    the caller, epoch 1 stays committed and nothing after it, no branch
+    or scheduler worker thread is left, and a resumed replay with a
+    passing audit matches the oracle."""
+    import threading
+
+    from techtalk_data_pipeline_snowpark_spark.cdc import EpochAuditError
+
+    ev = change_events(spark, 1500, seed=5)
+    workers = set()
+
+    def audit(branch, res):
+        workers.add(threading.current_thread())
+        return res.epoch_id != 2
+
+    root = str(tmp_path / "t")
+    engine = CdcEngine(spark, root, num_buckets=4, audit_fn=audit)
+    with pytest.raises(EpochAuditError, match="epoch 2 "):
+        engine.replay(ev, epoch_size=500)
+    assert engine.last_lsn() == 500
+    assert engine.table().list_branches() == []
+    assert workers and threading.current_thread() not in workers
+    alive = set(threading.enumerate())
+    assert not any(t in alive for t in workers)
+
+    resumed = CdcEngine(spark, root, num_buckets=4, audit_fn=lambda br, res: True)
+    assert [r.lsn_to for r in resumed.replay(ev, epoch_size=500)] == [1000, 1500]
+    _assert_state_equal(_final_state_pdf(resumed), _oracle_pdf(ev.toPandas()))
 
 
 def test_wap_audit_sees_branch_not_main(spark, tmp_path):

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from techtalk_data_pipeline_snowpark_spark.cdc import (
+    CdcEngine,
     MultiTableCdcEngine,
     TableRoute,
 )
@@ -372,6 +373,22 @@ def test_validation(spark, tmp_path):
         mt.routed(_union_log(spark).drop("value"), "users")
     with pytest.raises(ValueError, match="no discriminator column"):
         mt.routed(_union_log(spark).drop("tbl"), "users")
+
+
+@pytest.mark.parametrize("epoch_size", [0, -1])
+@pytest.mark.parametrize("multi", [False, True])
+def test_replay_rejects_non_positive_epoch_size(spark, tmp_path, multi, epoch_size):
+    """A non-positive epoch size would never advance the epoch grid: both
+    replays refuse it before any table is created."""
+    if multi:
+        owner = MultiTableCdcEngine(spark, str(tmp_path / "mt"), _routes())
+        log, engines = _union_log(spark), list(owner.engines.values())
+    else:
+        owner = CdcEngine(spark, str(tmp_path / "t"), num_buckets=4)
+        log, engines = change_events(spark, 100, seed=3), [owner]
+    with pytest.raises(ValueError, match="epoch_size must be positive"):
+        owner.replay(log, epoch_size=epoch_size)
+    assert not any(e.table_exists() for e in engines)
 
 
 def _land_waves(spark, log, events_dir, waves=4):
