@@ -1153,12 +1153,13 @@ FROM o JOIN c ON o.custkey = c.c_custkey
 
 
 def equality_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equality deletes under the exact-oracle gate: the key set itself is
-    committed (Iceberg v2 equality-delete shape — ZERO table scan, no
-    survivor rewrite), readers anti-join it out; a LATER append re-inserts
-    some of the deleted keys and must survive (refs attach per-file at
-    commit time, so newer files never see the older delete)."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
+    """A key-set delete under the exact-oracle gate: the doomed keys are
+    semi-joined against the table and their (file, row) positions
+    committed as deletion vectors (no survivor rewrite), which readers
+    anti-join out; a LATER append re-inserts some of the deleted keys and
+    must survive (DVs attach to the files live at commit time, so newer
+    files never see the older delete)."""
+    from techtalk_data_pipeline_snowpark_spark.lake import mor_delete_keys
 
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("o_orderkey"),
@@ -1175,7 +1176,7 @@ def equality_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tbl.append(orders)
     doomed = orders.where(F.col("o_orderkey") % 100 == 0).select("o_orderkey")
-    equality_delete_keys(tbl, doomed, ["o_orderkey"])
+    mor_delete_keys(tbl, doomed, ["o_orderkey"])
     reborn = orders.where(F.col("o_orderkey") % 200 == 0).select(
         "o_orderkey",
         F.lit("Z").alias("o_orderstatus"),

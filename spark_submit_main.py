@@ -48,10 +48,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--quarantine-dir", default=None,
                    help="dead-letter dir: null-key events are appended here "
                         "as raw parquet (always counted in the manifest)")
-    p.add_argument("--all-delete-mode", choices=("mor", "equality", "merge"),
-                   default="mor",
-                   help="how a 100%%-delete epoch commits: positional DVs "
-                        "(mor), scan-free equality deletes, or CoW merge")
     p.add_argument("--bg-compact", type=float, default=None, metavar="SECS",
                    help="run table maintenance on a BACKGROUND thread every "
                         "SECS seconds, concurrent with the epoch loop, using "
@@ -161,17 +157,11 @@ def main(argv: list[str] | None = None) -> int:
             fork = int(
                 branch.snapshot().properties.get("lake.branch.base") or 0
             )
-            before = sum(
-                (m or {}).get("rows") or 0
-                for m in branch.snapshot(fork).files.values()
-            )
+            # from file metadata unless the fork carries DVs (then a scan):
+            # raw file row counts still include DV-deleted rows
+            before = branch.count_rows(fork)
             after = branch.read().count()
-            if args.all_delete_mode == "equality" and res.rows_inserted == 0:
-                # equality deletes report keys TARGETED, not rows proven
-                # live — exact conservation only bounds the delta
-                ok = before - res.rows_deleted <= after <= before
-            else:
-                ok = after == before + res.rows_inserted - res.rows_deleted
+            ok = after == before + res.rows_inserted - res.rows_deleted
             audits.append({"epoch": res.epoch_id, "rows_before": before,
                            "rows_after": after, "passed": ok})
             return ok
@@ -184,7 +174,6 @@ def main(argv: list[str] | None = None) -> int:
         salted=args.salted,
         use_pandas_udfs=not args.no_pandas_udfs,
         broadcast_key_limit=args.broadcast_limit,
-        all_delete_mode=args.all_delete_mode,
         quarantine_dir=args.quarantine_dir,
         audit_fn=audit_fn,
         bloom=args.bloom,

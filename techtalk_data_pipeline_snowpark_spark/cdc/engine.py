@@ -40,9 +40,14 @@ from ..functions.text import (
     normalize_lang_sql,
     sha256_hex,
 )
-from ..lake import ConcurrentCommitError, LakeTable, bucket_expr, merge_into
+from ..lake import (
+    ConcurrentCommitError,
+    LakeTable,
+    bucket_expr,
+    merge_into,
+    mor_delete_keys,
+)
 from .dedup import (
-    dedup_latest,
     dedup_latest_salted,
     dedup_latest_via_winners,
     winner_keys,
@@ -87,7 +92,6 @@ class CdcEngine:
         num_salts: int = 16,
         use_pandas_udfs: bool = True,
         broadcast_key_limit: int = 2_000_000,
-        all_delete_mode: str = "mor",
         quarantine_dir: str | None = None,
         audit_fn=None,
         bloom: bool = False,
@@ -111,20 +115,6 @@ class CdcEngine:
         # blooms for each staged file. Set at table CREATE; a pre-existing
         # table keeps whatever bloom property it already carries.
         self.bloom = bloom
-        # How a 100%-delete epoch commits (compact() absorbs either MOR
-        # form off the ingest path):
-        #   "mor"      — positional deletion vectors: key-semi-join scan of
-        #                the touched buckets records doomed (file, pos)
-        #                pairs; exact rows_deleted metric (default).
-        #   "equality" — equality deletes: the KEY SET itself is committed,
-        #                ZERO table scan (O(keys) regardless of table
-        #                size); rows_deleted then reports the number of
-        #                winner keys targeted, not rows proven live —
-        #                final state is still exact (readers anti-join).
-        #   "merge"    — copy-on-write MERGE (rewrites touched buckets).
-        if all_delete_mode not in ("mor", "equality", "merge"):
-            raise ValueError(f"unknown all_delete_mode {all_delete_mode!r}")
-        self.all_delete_mode = all_delete_mode
         # dead-letter channel: events whose key columns contain nulls (the
         # WAL contract requires a full key) are counted in every epoch's
         # manifest (null_key_winners, from the same stats pass — free) and,
@@ -543,17 +533,12 @@ class CdcEngine:
             "quarantined_to": self.quarantine_dir if n_null_winners else None,
             "committed_at": time.time(),
         }
-        if (
-            self.all_delete_mode != "merge"
-            and n_delete_winners == n_events
-            and snap_for_merge.files
-        ):
-            # every winner is a delete → merge-on-read. "mor": key-semi-join
-            # scan of the touched buckets records doomed (file, pos) pairs
-            # as deletion vectors; zero surviving rows rewritten.
-            # "equality": the key set itself is the commit — no scan at all.
-            # Either way the commit still carries the epoch manifest + LSN
-            # watermark atomically.
+        if n_delete_winners == n_events and snap_for_merge.files:
+            # every winner is a delete → merge-on-read: a key-semi-join scan
+            # of the touched buckets records the doomed (file, pos) pairs as
+            # deletion vectors; zero surviving rows rewritten. The commit
+            # still carries the epoch manifest + LSN watermark atomically;
+            # compact() absorbs the DVs off the ingest path.
             props = {
                 PROP_LAST_LSN: lsn_to,
                 PROP_EPOCH_ID: epoch_id,
@@ -561,35 +546,19 @@ class CdcEngine:
             }
             tb = [int(b) for b in partition_offsets] if buckets_trusted else None
             # null-key winners can't address a row — keep them out of the
-            # committed key set / position scan (and out of keys_deleted)
-            winners_ok = winners.where(~null_key)
-            if self.all_delete_mode == "equality":
-                from ..lake.merge import equality_delete_keys
-
-                res = equality_delete_keys(
-                    table,
-                    winners_ok,
-                    self.key_cols,
-                    snap=snap_for_merge,
-                    properties=props,
-                    touched_buckets=tb,
-                )
-                deleted = res.summary["keys_deleted"]
-            else:
-                from ..lake.merge import mor_delete_keys
-
-                res = mor_delete_keys(
-                    table,
-                    winners_ok,
-                    self.key_cols,
-                    snap=snap_for_merge,
-                    properties=props,
-                    touched_buckets=tb,
-                    broadcast=n_events <= self.broadcast_key_limit,
-                )
-                deleted = res.summary["rows_affected"]
+            # position scan
+            res = mor_delete_keys(
+                table,
+                winners.where(~null_key),
+                self.key_cols,
+                snap=snap_for_merge,
+                properties=props,
+                touched_buckets=tb,
+                broadcast=n_events <= self.broadcast_key_limit,
+            )
             return EpochResult(
-                epoch_id, lsn_from, lsn_to, n_events, 0, 0, deleted,
+                epoch_id, lsn_from, lsn_to, n_events, 0, 0,
+                res.summary["rows_affected"],
             )
 
         res = merge_into(
@@ -874,12 +843,3 @@ class CdcEngine:
                 removed.append(d)
         return removed
 
-
-def merge_projected_update_row(schema: T.StructType, source_cols: set[str]):
-    """Columns absent from a batch keep their target value on update —
-    used when schema evolution adds columns mid-stream."""
-    return {
-        f.name: F.coalesce(F.col(f"s.{f.name}"), F.col(f"t.{f.name}"))
-        for f in schema.fields
-        if f.name in source_cols
-    }

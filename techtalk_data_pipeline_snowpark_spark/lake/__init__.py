@@ -1,7 +1,7 @@
 from .changefeed import ChangeBatch, ChangelogCursor, CursorConflict
 from .ivm import IncrementalAggView, IncrementalDistinctView, IncrementalHllView
 from .ivm_join import IncrementalJoinView
-from .merge import delete, equality_delete_keys, merge_into, mor_delete_keys, update
+from .merge import delete, merge_into, mor_delete_keys, update
 from .store import FakeObjectStore, PosixStore, TableStore
 from .table import CommitResult, ConcurrentCommitError, LakeTable, Snapshot, bucket_expr
 from .views import ViewCatalog
@@ -24,7 +24,6 @@ __all__ = [
     "Snapshot",
     "bucket_expr",
     "delete",
-    "equality_delete_keys",
     "merge_into",
     "mor_delete_keys",
     "update",

@@ -22,12 +22,19 @@ optimizes —
 4. rewrite touched buckets (one shuffle keyed by bucket), atomic commit of
    add+remove+metrics+properties in one log entry (the transaction).
 
-Metrics are computed with a key-only column-pruned probe of the touched
-buckets (reads just the key columns — parquet column pruning), not by
-caching the full joined plan.
+Metrics ride the arbitration job itself (Dataset.observe), not a cached
+copy of the joined plan.
+
+Deletes have a second, merge-on-read form (``delete(mode="mor")``,
+``mor_delete_keys``): a scan records the doomed (file, row-position) pairs
+as positional deletion vectors and the commit is metadata-only. DVs are
+the table's only merge-on-read delete format; readers anti-join them at
+scan time and ``compact()`` absorbs them.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +49,92 @@ def _touched_buckets(source: DataFrame, key_cols: list[str], n: int) -> list[int
         .collect()
     )
     return sorted(r["_b"] for r in rows)
+
+
+def _bucket_prunable(snap, keys: list[str]) -> bool:
+    """Bucket pruning is sound ONLY when ``keys`` are exactly the table's
+    bucketing keys (same columns, same order — F.hash is order-sensitive)
+    on a trusted layout: a file's bucket is pmod(hash(snap.key_cols), N),
+    so matches for any other key set may live in any bucket."""
+    return (
+        bool(snap.num_buckets)
+        and list(keys) == list(snap.key_cols)
+        and bucket_layout_trusted(snap)
+    )
+
+
+def _key_targeted_files(
+    table: LakeTable,
+    snap,
+    source: DataFrame,
+    keys: list[str],
+    touched_buckets: list[int] | None,
+) -> tuple[list[str], list[int] | None, int]:
+    """Files a key-targeted mutation must read: those of the buckets the
+    source keys hash to, then the ones whose per-file key blooms may hold a
+    source key. Returns ``(files, buckets, bloom_skipped)``; ``buckets`` is
+    None — and every file is returned — when bucket pruning is unsound
+    (:func:`_bucket_prunable`). Callers that already aggregated per-bucket
+    stats (the CDC engine's offsets pass) hand ``touched_buckets`` in,
+    saving one source scan.
+
+    Blooms (lake/bloom.py, opt-in via table property) bound the work from
+    touched buckets to touched FILES — the difference between rewriting a
+    10 GB bucket and rewriting the one file a changed key lives in. False
+    positives cost a needless read; false negatives are impossible (shared
+    hash pipeline)."""
+    if not _bucket_prunable(snap, keys):
+        return list(snap.files), None, 0
+    buckets = (
+        sorted(touched_buckets)
+        if touched_buckets is not None
+        else _touched_buckets(source, keys, snap.num_buckets)
+    )
+    files = snap.files_in_buckets(set(buckets))
+    bloom_skipped = 0
+    if files:
+        from .bloom import bloom_cols_of, surviving_files_by_bloom
+
+        if set(bloom_cols_of(snap)) & set(keys):
+            files, bloom_skipped = surviving_files_by_bloom(
+                table, snap, source, keys, files
+            )
+    return files, buckets, bloom_skipped
+
+
+def _commit_dv(
+    table: LakeTable,
+    snap,
+    hits: DataFrame,
+    files: list[str],
+    properties: dict | None,
+    summary: dict,
+    pin_empty: bool = True,
+) -> CommitResult:
+    """Stage the (fname, pos) ``hits`` of a position scan of ``snap``'s
+    ``files`` as one deletion-vector set and commit it metadata-only,
+    pinned to ``snap.version + 1``. Every affected file references the
+    whole DV set of the commit; the read-side anti-join keys on (fname,
+    pos), so rows of other files in a shared DV file can never mis-apply.
+    No hits commits an empty delete — unpinned when ``pin_empty`` is
+    False."""
+    dv_rels, per_file = table._stage_dv(hits)
+    fname_to_rel = {os.path.basename(p): p for p in files}
+    return table.commit_rewrite(
+        adds=[],
+        removes=[],
+        operation="delete",
+        properties=properties,
+        summary={
+            "rows_affected": int(sum(per_file.values())),
+            "files_with_dv": len(per_file),
+            "dv_files": len(dv_rels),
+            **summary,
+            "mode": "mor",
+        },
+        expected_version=snap.version + 1 if per_file or pin_empty else None,
+        dv={fname_to_rel[fn]: list(dv_rels) for fn in per_file} or None,
+    )
 
 
 def _observed_metrics(obs, adds: list[dict], pre_observe: DataFrame, exprs) -> dict:
@@ -145,18 +238,7 @@ def merge_into(
         if do_insert and when_matched_delete is not None:
             insert_cond = ~F.coalesce(when_matched_delete, F.lit(False))
 
-    # Bucket pruning is sound ONLY when the merge keys are exactly the
-    # table's bucketing keys (same columns, same order — F.hash is
-    # order-sensitive): a file's bucket is pmod(hash(snap.key_cols), N), so
-    # matches for any other key set (or an expression ON) may live in any
-    # bucket.
-    can_prune = (
-        on_expr is None
-        and bool(snap.num_buckets)
-        and list(keys) == list(snap.key_cols)
-        and bucket_layout_trusted(snap)
-    )
-    if rebase and not can_prune:
+    if rebase and (on_expr is not None or not _bucket_prunable(snap, keys)):
         # rebase safety is PROVEN by bucket disjointness — when pruning is
         # unsound (expression ON, non-bucket keys, unbucketed/untrusted
         # layout) a racing row anywhere could match this merge, so there
@@ -165,37 +247,13 @@ def merge_into(
             "merge rebase=True requires bucket-pruned merges (named keys "
             "equal to the table's bucketing keys on a trusted layout)"
         )
-    if can_prune:
-        # callers that already aggregated per-bucket stats (the CDC engine's
-        # offsets pass) hand the bucket list in — saves one source scan.
-        buckets = (
-            sorted(touched_buckets)
-            if touched_buckets is not None
-            else _touched_buckets(source, keys, snap.num_buckets)
+    if on_expr is None:
+        touched_files, buckets, bloom_skipped = _key_targeted_files(
+            table, snap, source, keys, touched_buckets
         )
-        touched_files = snap.files_in_buckets(set(buckets))
-        untouched = [p for p in snap.files if p not in set(touched_files)]
     else:
-        buckets, touched_files, untouched = None, list(snap.files), []
-
-    # file-grain copy-on-write: per-file key blooms (lake/bloom.py, opt-in
-    # via table property) mark which touched files MAY contain a source
-    # key; the rest are carried over unchanged. Bucket pruning bounds the
-    # rewrite to touched buckets; blooms bound it to touched FILES — the
-    # difference between rewriting a 10 GB bucket and rewriting the one
-    # file a changed key actually lives in. False positives rewrite a file
-    # verbatim; false negatives are impossible (shared hash pipeline).
-    bloom_skipped = 0
-    if can_prune and touched_files:
-        from .bloom import bloom_cols_of, surviving_files_by_bloom
-
-        if set(bloom_cols_of(snap)) & {k for k in keys}:
-            touched_files, bloom_skipped = surviving_files_by_bloom(
-                table, snap, source, keys, touched_files
-            )
-            if bloom_skipped:
-                touched_set = set(touched_files)
-                untouched = [p for p in snap.files if p not in touched_set]
+        # expression ON cannot bucket-prune: matches may live anywhere
+        touched_files, buckets, bloom_skipped = list(snap.files), None, 0
 
     tgt = table._read_files(touched_files, schema, files_meta=snap.files)
 
@@ -338,7 +396,7 @@ def merge_into(
         "rows_updated": int(m.get("updated") or 0),
         "rows_deleted": int(m.get("deleted") or 0),
         "buckets_rewritten": len(buckets) if buckets is not None else None,
-        "files_carried": len(untouched),
+        "files_carried": len(snap.files) - len(touched_files),
         "files_skipped_by_bloom": bloom_skipped,
     }
     return table.commit_rewrite(
@@ -396,53 +454,24 @@ def _delete_mor(
     condition: Column,
     properties: dict | None,
 ) -> CommitResult:
-    import os
-
+    from .bloom import prune_files_by_point_blooms
     from .stats import prune_files
 
     snap = table.snapshot()
-    schema = snap.schema
-    cond = F.coalesce(condition, F.lit(False))
     candidates = prune_files(snap.files, condition)
     # point-predicate blooms after zone maps (see _rewrite_matching_files)
-    from .bloom import prune_files_by_point_blooms
-
     candidates = prune_files_by_point_blooms(table, snap, candidates, condition)
     df = table._read_files(
-        candidates, schema, files_meta=snap.files, keep_position=True
+        candidates, snap.schema, files_meta=snap.files, keep_position=True
     )
-    hits = df.where(cond).select(
+    hits = df.where(F.coalesce(condition, F.lit(False))).select(
         F.col("__fname").alias("fname"), F.col("__pos").alias("pos")
     )
-    dv_rels, per_file = table._stage_dv(hits)
-    summary_base = {
-        "files_candidates": len(candidates),
-        "files_total": len(snap.files),
-        "mode": "mor",
-    }
-    if not per_file:
-        return table.commit_rewrite(
-            [], [], "delete", properties=properties,
-            summary={"rows_affected": 0, **summary_base},
-        )
-    fname_to_rel = {os.path.basename(p): p for p in candidates}
-    # every affected file references the whole DV file set for this commit;
-    # the read-side anti-join keys on (fname, pos), so cross-file rows in a
-    # shared DV file can never mis-apply.
-    dv_map = {fname_to_rel[fn]: list(dv_rels) for fn in per_file}
-    return table.commit_rewrite(
-        adds=[],
-        removes=[],
-        operation="delete",
-        properties=properties,
-        summary={
-            "rows_affected": int(sum(per_file.values())),
-            "files_with_dv": len(per_file),
-            "dv_files": len(dv_rels),
-            **summary_base,
-        },
-        expected_version=snap.version + 1,
-        dv=dv_map,
+    # a delete that matches nothing commits unpinned, like the CoW path
+    return _commit_dv(
+        table, snap, hits, candidates, properties,
+        summary={"files_candidates": len(candidates), "files_total": len(snap.files)},
+        pin_empty=False,
     )
 
 
@@ -460,35 +489,13 @@ def mor_delete_keys(
     path: a 100%-delete epoch costs one bucket-pruned key-semi-join scan +
     a tiny DV write — NO surviving row is rewritten (copy-on-write MERGE
     would rewrite every touched bucket to drop a few rows). ``compact``
-    absorbs the DVs later, off the ingest latency path.
+    absorbs the DVs later, off the ingest latency path. Files added after
+    the commit never carry its DVs, so a re-inserted key survives.
     """
     snap = snap if snap is not None else table.snapshot()
-    can_prune = (
-        bool(snap.num_buckets)
-        and list(keys) == list(snap.key_cols)
-        and bucket_layout_trusted(snap)
+    files, _, bloom_skipped = _key_targeted_files(
+        table, snap, source_keys, keys, touched_buckets
     )
-    if can_prune:
-        buckets = (
-            sorted(touched_buckets)
-            if touched_buckets is not None
-            else _touched_buckets(source_keys, keys, snap.num_buckets)
-        )
-        files = snap.files_in_buckets(set(buckets))
-    else:
-        files = list(snap.files)
-    # blooms shrink the position scan from touched buckets to the files
-    # that may actually hold a doomed key (lake/bloom.py, opt-in)
-    bloom_skipped = 0
-    if can_prune and files:
-        from .bloom import bloom_cols_of, surviving_files_by_bloom
-
-        if set(bloom_cols_of(snap)) & set(keys):
-            files, bloom_skipped = surviving_files_by_bloom(
-                table, snap, source_keys, keys, files
-            )
-    import os
-
     tgt = table._read_files(files, snap.schema, files_meta=snap.files, keep_position=True)
     sk = source_keys.select(*keys).distinct()
     if broadcast:
@@ -496,105 +503,9 @@ def mor_delete_keys(
     hits = tgt.join(sk, on=list(keys), how="left_semi").select(
         F.col("__fname").alias("fname"), F.col("__pos").alias("pos")
     )
-    dv_rels, per_file = table._stage_dv(hits)
-    summary = {
-        "rows_affected": int(sum(per_file.values())),
-        "files_with_dv": len(per_file),
-        "files_scanned": len(files),
-        "files_skipped_by_bloom": bloom_skipped,
-        "mode": "mor",
-    }
-    fname_to_rel = {os.path.basename(p): p for p in files}
-    dv_map = {fname_to_rel[fn]: list(dv_rels) for fn in per_file} if per_file else None
-    return table.commit_rewrite(
-        adds=[],
-        removes=[],
-        operation="delete",
-        properties=properties,
-        summary=summary,
-        expected_version=snap.version + 1,
-        dv=dv_map,
-    )
-
-
-def equality_delete_keys(
-    table: LakeTable,
-    source_keys: DataFrame,
-    keys: list[str],
-    snap=None,
-    properties: dict | None = None,
-    touched_buckets: list[int] | None = None,
-) -> CommitResult:
-    """Delete every target row whose key appears in ``source_keys`` as an
-    EQUALITY delete (Iceberg v2 equality-delete shape): the key set itself
-    is committed — NO table scan, NO survivor rewrite, no positions. The
-    read side anti-joins the key file onto the affected files; files added
-    after this commit never carry the ref, so a re-inserted key survives.
-
-    This is the cheapest possible all-delete CDC epoch: O(|keys|) work at
-    commit time regardless of table size (``mor_delete_keys`` still scans
-    the touched buckets to record positions). The trade: ``rows_affected``
-    is unknown without a scan (reported as -1; ``keys_deleted`` carries the
-    key count), and every subsequent read of the affected files pays the
-    anti-join until ``compact()`` absorbs it — run equality deletes on the
-    hot ingest path, compact off it.
-    """
-    import os
-
-    snap = snap if snap is not None else table.snapshot()
-    sk = source_keys.select(*keys).distinct()
-    can_prune = (
-        bool(snap.num_buckets)
-        and list(keys) == list(snap.key_cols)
-        and bucket_layout_trusted(snap)
-    )
-    if can_prune:
-        buckets = (
-            sorted(touched_buckets)
-            if touched_buckets is not None
-            else _touched_buckets(sk, keys, snap.num_buckets)
-        )
-        files = snap.files_in_buckets(set(buckets))
-    else:
-        files = list(snap.files)
-    # blooms shrink the ref-attachment set: files that provably hold none
-    # of the doomed keys never acquire the edv ref, so they never pay the
-    # read-side anti-join (and compact never rewrites them to absorb it)
-    bloom_skipped = 0
-    if can_prune and files:
-        from .bloom import bloom_cols_of, surviving_files_by_bloom
-
-        if set(bloom_cols_of(snap)) & set(keys):
-            files, bloom_skipped = surviving_files_by_bloom(
-                table, snap, sk, keys, files
-            )
-    edv_rels = table._stage_edv(sk)
-    n_keys = table.spark.read.parquet(
-        *[os.path.join(table.root, r) for r in edv_rels]
-    ).count()
-    summary = {
-        "rows_affected": -1,  # unknown by design: no scan happened
-        "keys_deleted": int(n_keys),
-        "files_affected": len(files),
-        "files_skipped_by_bloom": bloom_skipped,
-        "mode": "equality",
-    }
-    if not files or n_keys == 0:
-        for rel in edv_rels:
-            table.store.delete(rel)
-        return table.commit_rewrite(
-            [], [], "delete", properties=properties,
-            summary={**summary, "files_affected": 0},
-            expected_version=snap.version + 1,
-        )
-    return table.commit_rewrite(
-        adds=[],
-        removes=[],
-        operation="delete",
-        properties=properties,
-        summary=summary,
-        expected_version=snap.version + 1,
-        edv={p: list(edv_rels) for p in files},
+    return _commit_dv(
+        table, snap, hits, files, properties,
+        summary={"files_scanned": len(files), "files_skipped_by_bloom": bloom_skipped},
     )
 
 
@@ -609,7 +520,6 @@ def _rewrite_matching_files(
     (2) the rewrite of hit files with the affected-row count riding it via
     Dataset.observe — no separate count probes (same trick MERGE uses;
     r1 did 3-4 jobs here)."""
-    import os
     from uuid import uuid4
 
     from pyspark.sql import Observation

@@ -15,8 +15,8 @@ Scale posture: at 10^10 rows a full-scan ``count(*)`` reads every page of
 for. Correctness rules — every check degrades to ``None`` ("scan instead")
 rather than guessing:
 
-* any live file referencing a deletion vector or equality-delete file →
-  None (deleted rows make counts/extrema stale);
+* any live file referencing a deletion vector → None (deleted rows make
+  counts/extrema stale);
 * COUNT: any file missing ``rows`` → None;
 * MIN/MAX per column: any file missing that column's stats → None (cannot
   distinguish "all null" from "stats collection failed" without the file's
@@ -86,7 +86,7 @@ def metadata_aggregate(
             raise ValueError(f"unknown column {c!r}")
 
     metas = list(snap.files.values())
-    if any(m.get("dv") or m.get("edv") for m in metas):
+    if any(m.get("dv") for m in metas):
         return None
 
     out: dict = {}

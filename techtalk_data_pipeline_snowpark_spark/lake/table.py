@@ -411,7 +411,6 @@ class LakeTable:
                 )
         touched = set(entry.get("remove") or ())
         touched |= set(entry.get("dv") or ())
-        touched |= set(entry.get("edv") or ())
         for p in sorted(touched):
             if new.files.get(p) != base.files.get(p):
                 _refuse(f"racing writer rewrote/deleted/DV'd {p}")
@@ -444,7 +443,6 @@ class LakeTable:
             theirs = {a.get("bucket") for a in (e.get("add") or ())}
             theirs |= {_bucket(p) for p in (e.get("remove") or ())}
             theirs |= {_bucket(p) for p in (e.get("dv") or ())}
-            theirs |= {_bucket(p) for p in (e.get("edv") or ())}
             if None in mine or None in theirs:
                 _refuse("unbucketed files — cannot prove key disjointness")
             overlap = mine & theirs
@@ -491,6 +489,9 @@ class LakeTable:
         num_buckets = None
         props: dict = {}
         start = 1
+        # live file -> version whose equality-delete ('edv') ref it carries
+        # (a delete format of earlier releases, no longer applied on read)
+        legacy_edv: dict[str, int] = {}
         cps = [v for v in self._available_checkpoints() if v <= version]
         if cps:
             cp = json.loads(self.store.read_bytes(self._checkpoint_path(max(cps))))
@@ -500,6 +501,7 @@ class LakeTable:
             num_buckets = cp["num_buckets"]
             props = dict(cp["properties"])
             start = cp["version"] + 1
+            legacy_edv = {p: cp["version"] for p, m in files.items() if "edv" in m}
         for e in self.log_entries(start, version):
             if e.get("schema"):
                 schema_json = e["schema"]
@@ -509,6 +511,7 @@ class LakeTable:
                 num_buckets = e["num_buckets"]
             for rm in e.get("remove", []):
                 files.pop(rm, None)
+                legacy_edv.pop(rm, None)
             for add in e.get("add", []):
                 meta = {"rows": add.get("rows"), "bucket": add.get("bucket")}
                 if add.get("stats"):
@@ -522,13 +525,19 @@ class LakeTable:
             for p, dvs in (e.get("dv") or {}).items():
                 if p in files:
                     files[p].setdefault("dv", []).extend(dvs)
-            # equality deletes: {data_rel_path: [edv_rel_path, ...]} — refs
-            # attach only to files present at commit time, so later adds
-            # (re-inserted keys) are never filtered by an older delete.
-            for p, edvs in (e.get("edv") or {}).items():
-                if p in files:
-                    files[p].setdefault("edv", []).extend(edvs)
+            legacy_edv.update(
+                (p, e["version"]) for p in (e.get("edv") or ()) if p in files
+            )
             props.update(e.get("properties", {}))
+        if legacy_edv:
+            # reading such a file plain would bring its deleted rows back
+            p, v = min(legacy_edv.items(), key=lambda kv: kv[1])
+            raise ValueError(
+                f"{self.root}: v{v} left an equality-delete ('edv') ref on "
+                f"live file {p}; this release applies only positional "
+                f"deletion vectors — compact the table with the earlier "
+                f"release before reading it"
+            )
         schema = T.StructType.fromJson(json.loads(schema_json))
         return Snapshot(version, schema, files, key_cols, num_buckets, props)
 
@@ -617,45 +626,11 @@ class LakeTable:
         deletion vectors referenced by the requested files are applied: rows
         at recorded (file, position) pairs are anti-joined out via the
         parquet ``_metadata.row_index`` column — merge-on-read, the Iceberg
-        v2 positional-delete shape. EQUALITY deletes (``edv`` refs — key
-        sets committed without any table scan) are applied per ref-group:
-        files sharing the same edv ref set are scanned together and
-        anti-joined on the edv file's own columns; files added after an
-        equality-delete commit never carry its ref, so re-inserted keys
-        survive. ``keep_position=True`` additionally exposes
-        ``__fname``/``__pos`` (file basename + row index) so mutation
-        discovery can record positions without ``input_file_name()`` (which
-        goes ambiguous once the DV side joins into the plan)."""
-        groups: dict[tuple, list[str]] = {}
-        if files_meta is not None:
-            for p in rel_paths:
-                refs = (files_meta.get(p, {}) or {}).get("edv") or []
-                groups.setdefault(tuple(sorted(set(refs))), []).append(p)
-        if len(groups) > 1 or (groups and next(iter(groups))):
-            # ≥1 non-empty edv ref set: scan each group, anti-join its keys
-            out = None
-            for refs, paths in groups.items():
-                part = self._read_files_plain(
-                    paths, schema, files_meta=files_meta, keep_position=keep_position
-                )
-                if refs:
-                    keys = self.spark.read.parquet(
-                        *[os.path.join(self.root, r) for r in refs]
-                    ).distinct()
-                    part = part.join(keys, on=list(keys.columns), how="left_anti")
-                out = part if out is None else out.unionByName(part)
-            return out
-        return self._read_files_plain(
-            rel_paths, schema, files_meta=files_meta, keep_position=keep_position
-        )
-
-    def _read_files_plain(
-        self,
-        rel_paths: list[str],
-        schema: T.StructType,
-        files_meta: dict[str, dict] | None = None,
-        keep_position: bool = False,
-    ) -> DataFrame:
+        v2 positional-delete shape. ``keep_position=True`` additionally
+        exposes ``__fname``/``__pos`` (file basename + row index) so
+        mutation discovery can record positions without
+        ``input_file_name()`` (which goes ambiguous once the DV side joins
+        into the plan)."""
         if not rel_paths:
             df = self.spark.createDataFrame([], schema)
             if keep_position:
@@ -715,7 +690,7 @@ class LakeTable:
         """Exact row count, answered from snapshot metadata in O(live
         files) with zero data I/O when provable (`lake/metaquery.py` —
         the Snowflake micro-partition count path), else by scan. Pending
-        merge-on-read deletes (DV/equality refs) force the scan."""
+        merge-on-read deletes (DV refs) force the scan."""
         from techtalk_data_pipeline_snowpark_spark.lake.metaquery import (
             metadata_aggregate,
         )
@@ -833,11 +808,11 @@ class LakeTable:
         # DV bookkeeping is only worth per-entry prev-snapshot lookups when
         # deletion vectors can actually exist in the range: either carried
         # in from before start_version or added by an entry in range.
-        dv_possible = any(e.get("dv") or e.get("edv") for e in entries)
+        dv_possible = any(e.get("dv") for e in entries)
         if not dv_possible and start_version >= 1:
             try:
                 dv_possible = any(
-                    (m or {}).get("dv") or (m or {}).get("edv")
+                    (m or {}).get("dv")
                     for m in self.snapshot(start_version).files.values()
                 )
             except Exception:
@@ -872,26 +847,6 @@ class LakeTable:
                 ).select(*[F.col(f.name) for f in schema.fields])
                 pieces.append(_tag(deleted, "delete", v))
                 continue
-            if e.get("edv"):
-                # equality delete: the commit's key set names the doomed
-                # rows. Read the affected files with the PRE-commit state
-                # applied (already-dead rows can't be re-deleted) and
-                # semi-join the keys. Touched-file-scoped.
-                prev = self.snapshot(v - 1)
-                affected = sorted(e["edv"].keys())
-                edv_new = sorted({d for ds in e["edv"].values() for d in ds})
-                rows = self._read_files(affected, schema, files_meta=prev.files)
-                # NB: do not shadow `keys` (the key-col NAME list) — later
-                # rewrite entries in this same range still classify
-                # updates/inserts with it
-                ekeys = spark.read.parquet(
-                    *[os.path.join(self.root, r) for r in edv_new]
-                ).distinct()
-                deleted = rows.join(
-                    ekeys, on=list(ekeys.columns), how="left_semi"
-                ).select(*[F.col(f.name) for f in schema.fields])
-                pieces.append(_tag(deleted, "delete", v))
-                continue
             if op in ("compact", "rebucket") or (not adds and not removes):
                 # compact/rebucket are row-set-invariant (their diff is
                 # empty by construction — don't pay the exceptAll to prove
@@ -904,17 +859,7 @@ class LakeTable:
             prev_meta = None
             if removes and dv_possible:
                 prev_meta = self.snapshot(v - 1).files
-                # Both positional DVs AND equality-delete refs ('edv') make
-                # the pre-image narrower than the raw files: a rewrite that
-                # removes a file carrying only equality deletes would
-                # otherwise read its already-dead rows unfiltered and emit
-                # them as spurious duplicate deletes at the rewrite version
-                # (changelog consumers like IVM would double-decrement).
-                if not any(
-                    (prev_meta.get(p, {}) or {}).get("dv")
-                    or (prev_meta.get(p, {}) or {}).get("edv")
-                    for p in removes
-                ):
+                if not any((prev_meta.get(p, {}) or {}).get("dv") for p in removes):
                     prev_meta = None
             old_rows = self._read_files(removes, schema, files_meta=prev_meta)
             changed = new_rows.exceptAll(old_rows)
@@ -1157,28 +1102,6 @@ class LakeTable:
             return [], {}
         return rels, per_file
 
-    def _stage_edv(self, keys: DataFrame) -> list[str]:
-        """Write an equality-delete key set into ``data/_edv/`` (not yet
-        committed). The parquet's own schema names the anti-join columns —
-        the read side never needs key plumbing. Returns rel paths."""
-        staging_rel = f".staging-edv-{uuid.uuid4().hex}"
-        # same fan-out as DV staging: edv files are re-read on every scan of
-        # their data files, so keep them few — but one writer would be a
-        # serial tail on a 10^8-key all-delete epoch.
-        keys.distinct().coalesce(8).write.mode("overwrite").parquet(
-            os.path.join(self.root, staging_rel)
-        )
-        rels: list[str] = []
-        moves: list[tuple[str, str]] = []
-        for fn in self.store.list_dir(staging_rel):
-            if fn.endswith(".parquet"):
-                rel = f"{DATA_DIR}/_edv/{uuid.uuid4().hex}.parquet"
-                moves.append((f"{staging_rel}/{fn}", rel))
-                rels.append(rel)
-        self.store.finalize(moves)
-        self.store.delete_dir(staging_rel)
-        return rels
-
     def enable_blooms(self, cols: list[str] | None = None) -> CommitResult:
         """Turn on per-file key bloom filters (lake/bloom.py) for every
         subsequent write. ``cols`` defaults to the table's key columns.
@@ -1260,7 +1183,6 @@ class LakeTable:
         summary: dict | None = None,
         expected_version: int | None = None,
         dv: dict[str, list[str]] | None = None,
-        edv: dict[str, list[str]] | None = None,
         num_buckets: int | None = None,
         rebase_from: "Snapshot | None" = None,
         key_disjoint: bool = True,
@@ -1275,8 +1197,6 @@ class LakeTable:
         }
         if dv:
             entry["dv"] = dv
-        if edv:
-            entry["edv"] = edv
         if schema is not None:
             entry["schema"] = schema.json()
         if num_buckets is not None:
@@ -1333,7 +1253,7 @@ class LakeTable:
 
         ``bin_pack_rows=N`` switches the victim policy from file-COUNT to
         file-SIZE (Delta ``OPTIMIZE``'s bin-packing): only files smaller
-        than N rows — plus any file carrying DV/equality-delete refs,
+        than N rows — plus any file carrying DV refs,
         whatever its size — are rewritten; files that already reached the
         target are left in place. This is the mode the long ingest tail
         wants: the count policy rewrites a whole victim bucket every pass,
@@ -1361,12 +1281,8 @@ class LakeTable:
                 for p in paths
                 if ((files[p] or {}).get("rows") or 0) < bin_pack_rows
                 or (files[p] or {}).get("dv")
-                or (files[p] or {}).get("edv")
             ]
-            has_refs = any(
-                (files[p] or {}).get("dv") or (files[p] or {}).get("edv")
-                for p in smalls
-            )
+            has_refs = any((files[p] or {}).get("dv") for p in smalls)
             return smalls if (len(smalls) >= 2 or has_refs) else []
 
         snap = self.snapshot()
@@ -1416,10 +1332,7 @@ class LakeTable:
                     p
                     for b, paths in by_bucket.items()
                     if len(paths) > target
-                    or any(
-                        snap.files[p].get("dv") or snap.files[p].get("edv")
-                        for p in paths
-                    )
+                    or any(snap.files[p].get("dv") for p in paths)
                     for p in paths
                 ]
             if not victims:
@@ -1487,10 +1400,7 @@ class LakeTable:
             target = max_files_per_bucket
             if stamp:
                 target = max(target, _stamp_target())
-            has_dv = any(
-                (snap.files[p] or {}).get("dv") or (snap.files[p] or {}).get("edv")
-                for p in victims
-            )
+            has_dv = any((snap.files[p] or {}).get("dv") for p in victims)
             if not victims or (
                 not sort_by
                 and not bin_pack_rows
@@ -1698,7 +1608,7 @@ class LakeTable:
         snapshots, so time-travel reads within that horizon stay valid
         (Iceberg expire-snapshots semantics). Returns count removed.
 
-        Staging reclamation: ``.staging-*`` dirs (data / dv / edv stages)
+        Staging reclamation: ``.staging-*`` dirs (data / dv stages)
         live under the table root but OUTSIDE data/, so the data walk never
         saw them — a crashed writer leaked its whole stage forever (review
         finding). A dir whose newest file is older than
@@ -1722,7 +1632,7 @@ class LakeTable:
             out.update(
                 d
                 for m in s.files.values()
-                for d in ((m or {}).get("dv", []) + (m or {}).get("edv", []))
+                for d in (m or {}).get("dv", [])
             )
             # bloom sidecar blobs are shared by every file of their commit —
             # live while any referencing file is
@@ -1839,7 +1749,7 @@ class LakeTable:
         answer to "the last ingest epoch was bad": restore, then re-ingest.
 
         The commit is minimal: only files whose meta (rows/bucket/stats/
-        blooms AND accumulated DV/EDV delete refs) differs between the two
+        blooms AND accumulated DV refs) differs between the two
         snapshots are removed/re-added — common undo-last-epoch restores
         touch just that epoch's files. Schema, bucket layout, and the
         target's properties are re-stamped wholesale (property keys
@@ -1848,7 +1758,7 @@ class LakeTable:
         overwritten by the target's values).
 
         Raises ValueError if the target version is the current one, is
-        outside the retained log, or if any of its data/DV/EDV files was
+        outside the retained log, or if any of its data/DV files was
         already reclaimed by vacuum (beyond the data retention horizon).
         Concurrency-safe: the commit conditionally puts the next version —
         a racing writer fails one of the two with ConcurrentCommitError."""
@@ -1875,7 +1785,6 @@ class LakeTable:
         needed = set(target.files)
         for m in target.files.values():
             needed.update(m.get("dv") or [])
-            needed.update(m.get("edv") or [])
         missing = sorted(p for p in needed if not self.store.exists(p))
         if missing:
             raise ValueError(
@@ -1888,7 +1797,6 @@ class LakeTable:
         ]
         adds: list[dict] = []
         dv: dict[str, list[str]] = {}
-        edv: dict[str, list[str]] = {}
         for p, m in target.files.items():
             if current.files.get(p) == m:
                 continue  # byte-identical meta — carry over untouched
@@ -1900,8 +1808,6 @@ class LakeTable:
             adds.append(a)
             if m.get("dv"):
                 dv[p] = list(m["dv"])
-            if m.get("edv"):
-                edv[p] = list(m["edv"])
         return self.commit_rewrite(
             adds,
             removes,
@@ -1910,7 +1816,6 @@ class LakeTable:
             properties=dict(target.properties),
             num_buckets=target.num_buckets,
             dv=dv or None,
-            edv=edv or None,
             summary={
                 "restored_to": version,
                 "files_readded": len(adds),
@@ -2017,7 +1922,7 @@ class LakeTable:
         self, name: str, drop: bool = True, max_retries: int = 5
     ) -> CommitResult:
         """Squash-publish branch ``name`` onto main as ONE atomic commit
-        carrying the branch's net file/dv/edv/schema/properties delta since
+        carrying the branch's net file/dv/schema/properties delta since
         its fork. Readers of main see the branch's whole history appear at
         a single version (changelog consumers get one publish commit).
 
@@ -2036,7 +1941,6 @@ class LakeTable:
         base = br.snapshot(fork)
         adds = []
         dv_delta: dict[str, list] = {}
-        edv_delta: dict[str, list] = {}
         for p, m in head.files.items():
             m = m or {}
             old = base.files.get(p)
@@ -2048,19 +1952,14 @@ class LakeTable:
                     add["bf"] = m["bf"]
                 adds.append(add)
                 # delete refs acquired on branch-added files re-attach via
-                # the same entry's dv/edv maps (snapshot applies adds first)
+                # the same entry's dv map (snapshot applies adds first)
                 if m.get("dv"):
                     dv_delta[p] = list(m["dv"])
-                if m.get("edv"):
-                    edv_delta[p] = list(m["edv"])
                 continue
             old = old or {}
             new_dv = [d for d in (m.get("dv") or []) if d not in (old.get("dv") or [])]
-            new_edv = [d for d in (m.get("edv") or []) if d not in (old.get("edv") or [])]
             if new_dv:
                 dv_delta[p] = new_dv
-            if new_edv:
-                edv_delta[p] = new_edv
         removes = [p for p in base.files if p not in head.files]
         props_delta = {
             k: v
@@ -2087,11 +1986,9 @@ class LakeTable:
             entry["num_buckets"] = head.num_buckets
         if dv_delta:
             entry["dv"] = dv_delta
-        if edv_delta:
-            entry["edv"] = edv_delta
         if props_delta:
             entry["properties"] = props_delta
-        touched = set(removes) | set(dv_delta) | set(edv_delta)
+        touched = set(removes) | set(dv_delta)
         for _ in range(max_retries):
             cur = self.snapshot()
             if cur.version != fork:

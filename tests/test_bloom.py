@@ -142,24 +142,18 @@ def test_point_delete_and_read_where_prune(spark, tmp_path):
     assert t.read_where(F.col("path") == F.lit("p500")).count() == 1
 
 
-def test_mor_and_equality_delete_bloom_scoping(spark, tmp_path):
+def test_mor_delete_bloom_scoping(spark, tmp_path):
     t = _mk(spark, str(tmp_path / "m"))
     keys = spark.createDataFrame([("r3", "p10")], "repo string, path string")
     r1 = M.mor_delete_keys(t, keys, ["repo", "path"])
     assert r1.summary["files_skipped_by_bloom"] > 0
     assert r1.summary["rows_affected"] == 1
-    keys2 = spark.createDataFrame([("r4", "p11")], "repo string, path string")
-    r2 = M.equality_delete_keys(t, keys2, ["repo", "path"])
-    assert r2.summary["files_skipped_by_bloom"] > 0
-    # only the bloom-surviving file pays the edv anti-join ref
-    snap = t.snapshot()
-    assert sum(1 for m_ in snap.files.values() if m_.get("edv")) == 1
     df = t.read()
-    assert df.count() == 3998
-    assert df.where("path in ('p10','p11')").count() == 0
-    # re-inserted key after the equality delete survives
-    t.append(spark.createDataFrame([("r4", "p11", 777)], SCHEMA))
-    assert t.read().where("path = 'p11'").first()["v"] == 777
+    assert df.count() == 3999
+    assert df.where("path = 'p10'").count() == 0
+    # re-inserted key after the DV delete survives
+    t.append(spark.createDataFrame([("r3", "p10", 777)], SCHEMA))
+    assert t.read().where("path = 'p10'").first()["v"] == 777
 
 
 def test_bloom_sidecar_vacuum_lifecycle(spark, tmp_path):

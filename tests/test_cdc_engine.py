@@ -392,36 +392,6 @@ def test_all_delete_epoch_uses_deletion_vectors(spark, tmp_path):
     assert engine.read_state().count() == len(live) - len(kill)
 
 
-def test_all_delete_epoch_cow_fallback_matches(spark, tmp_path):
-    """all_delete_mode="merge" keeps the old copy-on-write behavior and
-    converges to the same state."""
-    ev = change_events(spark, 300, n_repos=4, paths_per_repo=5, seed=3,
-                       op_mix=(1.0, 0.0, 0.0))
-    a = CdcEngine(spark, str(tmp_path / "mor"), num_buckets=4)
-    b = CdcEngine(spark, str(tmp_path / "cow"), num_buckets=4,
-                  all_delete_mode="merge")
-    for eng in (a, b):
-        eng.replay(ev, epoch_size=10**9)
-    live = [(r.repo, r.path) for r in a.read_state().select("repo", "path").collect()]
-    ev_cols = ev.columns
-    from datetime import datetime
-
-    del_rows = [
-        {c: None for c in ev_cols}
-        | {"lsn": 301 + i, "op": "delete", "repo": repo, "path": path,
-           "ts": datetime(2026, 1, 1)}
-        for i, (repo, path) in enumerate(live)
-    ]
-    dels = spark.createDataFrame(
-        [tuple(r[c] for c in ev_cols) for r in del_rows], ev.schema
-    )
-    full = ev.unionByName(dels)
-    ra = a.apply_epoch(full, 300, 300 + len(live))
-    rb = b.apply_epoch(full, 300, 300 + len(live))
-    assert ra.rows_deleted == rb.rows_deleted == len(live)
-    assert a.read_state().count() == b.read_state().count() == 0
-
-
 def test_key_column_widening_keeps_bucket_mapping(spark, tmp_path):
     """Widening a KEY column (int→long) must not re-map bucket ids: Spark's
     murmur3 hashes int(5) and long(5) differently, so without bucket_expr's
@@ -557,52 +527,6 @@ def test_replay_with_zorder_clustered_compaction(spark, tmp_path):
     mid_ts = e_z.read_state().agg(F.expr("percentile_approx(ts, 0.5)")).first()[0]
     kept = prune_files(snap.files, F.col("ts") > F.lit(mid_ts))
     assert 0 < len(kept) < len(snap.files)
-
-
-def test_all_delete_epoch_equality_mode(spark, tmp_path):
-    """all_delete_mode='equality' commits the key set with ZERO table scan
-    — no data files touched, edv refs only — and converges to the same
-    state as the positional-DV mode; exactly-once replay holds across the
-    equality commit."""
-    ev = change_events(spark, 300, n_repos=4, paths_per_repo=5, seed=3,
-                       op_mix=(1.0, 0.0, 0.0))
-    a = CdcEngine(spark, str(tmp_path / "mor"), num_buckets=4)
-    b = CdcEngine(spark, str(tmp_path / "eq"), num_buckets=4,
-                  all_delete_mode="equality")
-    for eng in (a, b):
-        eng.replay(ev, epoch_size=10**9)
-    live = [(r.repo, r.path) for r in a.read_state().select("repo", "path").collect()]
-    ev_cols = ev.columns
-    from datetime import datetime
-
-    kill = live[: len(live) // 2]
-    del_rows = [
-        {c: None for c in ev_cols}
-        | {"lsn": 301 + i, "op": "delete", "repo": repo, "path": path,
-           "ts": datetime(2026, 1, 1)}
-        for i, (repo, path) in enumerate(kill)
-    ]
-    dels = spark.createDataFrame(
-        [tuple(r[c] for c in ev_cols) for r in del_rows], ev.schema
-    )
-    full = ev.unionByName(dels)
-    files_before = set(b.table().snapshot().files)
-    ra = a.apply_epoch(full, 300, 300 + len(kill))
-    rb = b.apply_epoch(full, 300, 300 + len(kill))
-    assert ra.rows_deleted == len(kill)
-    assert rb.rows_deleted == len(kill)  # keys targeted == rows live here
-    snap_b = b.table().snapshot()
-    assert set(snap_b.files) == files_before       # zero files added/removed
-    assert any(m.get("edv") for m in snap_b.files.values())
-    assert not any(m.get("dv") for m in snap_b.files.values())
-    _assert_state_equal(_final_state_pdf(a), _final_state_pdf(b))
-    # idempotent re-apply across the equality commit
-    again = b.apply_epoch(full, 300, 300 + len(kill))
-    assert again.skipped
-    # compact absorbs; state intact
-    b.table().compact()
-    assert not any(m.get("edv") for m in b.table().snapshot().files.values())
-    _assert_state_equal(_final_state_pdf(a), _final_state_pdf(b))
 
 
 def test_null_key_events_quarantined_and_counted(spark, tmp_path):

@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from techtalk_data_pipeline_snowpark_spark.lake import LakeTable
-from techtalk_data_pipeline_snowpark_spark.lake.merge import delete, merge_into, update
+from techtalk_data_pipeline_snowpark_spark.lake.merge import (
+    delete,
+    merge_into,
+    mor_delete_keys,
+    update,
+)
 
 SCHEMA = T.StructType(
     [
@@ -183,143 +188,36 @@ def test_mor_unbucketed_table(spark, tmp_table_root):
     assert sorted(r.k for r in t.read().collect()) == list(range(6))
 
 
-# --------------------------------------------------------- equality deletes
-
-
-def test_equality_delete_is_scan_free_metadata(spark, tmp_table_root):
-    """equality_delete_keys commits the KEY SET — no data file added or
-    removed, no positions computed; readers anti-join it out."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = _mk(spark, tmp_table_root)
-    files_before = set(t.snapshot().files)
-    res = equality_delete_keys(
-        t, spark.createDataFrame([Row(k=i) for i in range(5)]), ["k"]
-    )
-    assert res.summary["mode"] == "equality"
-    assert res.summary["keys_deleted"] == 5
-    assert res.summary["rows_affected"] == -1  # unknown by design
-    snap = t.snapshot()
-    assert set(snap.files) == files_before
-    assert any(m.get("edv") for m in snap.files.values())
-    assert sorted(r.k for r in t.read().collect()) == list(range(5, 20))
-
-
-def test_equality_delete_bucket_scoped_refs(spark, tmp_table_root):
-    """Key-column deletes attach refs only to the touched buckets' files —
-    untouched buckets never pay the read-side anti-join."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = _mk(spark, tmp_table_root, n=40, buckets=4)
-    equality_delete_keys(t, spark.createDataFrame([Row(k=1)]), ["k"])
-    snap = t.snapshot()
-    tagged_buckets = {m["bucket"] for m in snap.files.values() if m.get("edv")}
-    assert len(tagged_buckets) == 1
-    assert sorted(r.k for r in t.read().collect()) == [i for i in range(40) if i != 1]
+# --------------------------------------------------------- key-set deletes
 
 
 def test_equality_delete_reinserted_key_survives(spark, tmp_table_root):
-    """Files appended AFTER the equality delete never carry its ref: a
-    re-inserted key must NOT be killed by the older delete (the Iceberg
-    sequence-number semantics)."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
+    """A key-set delete (``mor_delete_keys``, the shape the
+    equality_delete_orders entry gates) attaches its DVs only to the files
+    live at its commit: a key re-inserted AFTER it — by append or by
+    merge — must NOT be killed by the older delete."""
     t = _mk(spark, tmp_table_root, n=10)
-    equality_delete_keys(t, spark.createDataFrame([Row(k=3), Row(k=7)]), ["k"])
+    mor_delete_keys(t, spark.createDataFrame([Row(k=3), Row(k=7)]), ["k"])
     assert sorted(r.k for r in t.read().collect()) == [0, 1, 2, 4, 5, 6, 8, 9]
     t.append(_df(spark, [(3, "reborn")]))
     got = {(r.k, r.v) for r in t.read().collect()}
     assert (3, "reborn") in got and not any(k == 7 for k, _ in got)
-    # merge-based reinsert too (merge rewrites the touched bucket clean)
-    merge_into(t, _df(spark, [(7, "back")]), on=["k"], when_matched_update="all")
-    assert (7, "back") in {(r.k, r.v) for r in t.read().collect()}
-
-
-def test_equality_delete_stacks_with_positional_dv(spark, tmp_table_root):
-    """A file can carry BOTH a positional DV and an equality ref; both
-    apply."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = _mk(spark, tmp_table_root, n=12, buckets=1)
-    delete(t, F.col("k") < 3, mode="mor")
-    equality_delete_keys(t, spark.createDataFrame([Row(k=5), Row(k=6)]), ["k"])
-    assert sorted(r.k for r in t.read().collect()) == [3, 4, 7, 8, 9, 10, 11]
-
-
-def test_equality_delete_changelog_and_compact(spark, tmp_table_root):
-    """Changelog emits exactly the LIVE rows the key set killed (an
-    already-dead key emits nothing); compact absorbs the refs; vacuum then
-    drops the edv parquet."""
-    import os
-
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = _mk(spark, tmp_table_root, n=10)
-    delete(t, F.col("k") == 4, mode="mor")
-    v0 = t.latest_version()
-    equality_delete_keys(
-        t, spark.createDataFrame([Row(k=4), Row(k=5), Row(k=99)]), ["k"]
-    )
-    ch = t.read_changelog(v0).collect()
-    assert {(r.k, r._change_type) for r in ch} == {(5, "delete")}
-    t.compact()
-    snap = t.snapshot()
-    assert not any(m.get("edv") or m.get("dv") for m in snap.files.values())
-    assert sorted(r.k for r in t.read().collect()) == [0, 1, 2, 3, 6, 7, 8, 9]
-    t.vacuum(retain_versions=0)
-    edv_dir = os.path.join(tmp_table_root, "data", "_edv")
-    assert not os.path.isdir(edv_dir) or not os.listdir(edv_dir)
-
-
-def test_equality_delete_empty_keyset_noop(spark, tmp_table_root):
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = _mk(spark, tmp_table_root, n=5)
-    res = equality_delete_keys(
-        t, spark.createDataFrame([], "k long"), ["k"]
-    )
-    assert res.summary["keys_deleted"] == 0
-    assert res.summary["files_affected"] == 0
-    assert t.read().count() == 5
-
-
-def test_equality_delete_survives_key_widening(spark, tmp_table_root):
-    """An edv parquet written against an int key keeps filtering after the
-    key column widens to long (the anti-join coerces); re-inserted long
-    keys still survive the old delete."""
-    schema_int = T.StructType(
-        [T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]
-    )
-    schema_long = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = LakeTable.create(spark, tmp_table_root, schema_int, key_cols=["k"], num_buckets=2)
-    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(8)], schema_int))
-    equality_delete_keys(
-        t, spark.createDataFrame([(3,)], "k int"), ["k"]
-    )
-    t.commit_rewrite([], [], "evolve-schema", schema=schema_long)
-    assert sorted(r.k for r in t.read().collect()) == [0, 1, 2, 4, 5, 6, 7]
-    # re-insert the deleted key under the WIDENED type: must survive, and
-    # bucket-hash normalization keeps it in the same bucket as the int era
-    t.append(spark.createDataFrame([(3, "reborn")], schema_long))
-    got = {(r.k, r.v) for r in t.read().collect()}
-    assert (3, "reborn") in got
-    assert len(got) == 8
+    # merge-based reinsert: the merge reads its target with the DVs
+    # applied, so the dead key is absent and inserts (never updates)
+    res = merge_into(t, _df(spark, [(7, "back")]), on=["k"], when_matched_update="all")
+    assert res.summary["rows_inserted"] == 1 and res.summary["rows_updated"] == 0
+    got = sorted((r.k, r.v) for r in t.read().collect())
+    assert [k for k, _ in got] == list(range(10))
+    assert (3, "reborn") in got and (7, "back") in got
 
 
 def test_changelog_spans_equality_delete_then_merge(spark, tmp_table_root):
-    """A changelog range containing an equality-delete commit FOLLOWED by a
-    normal rewrite commit must classify the later commit's updates/inserts
-    correctly (review finding: the edv branch shadowed the key-name list
-    and crashed every later iteration)."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
-    t = _mk(spark, tmp_table_root, n=10)
+    """A changelog range holding a key-set DV delete FOLLOWED by a merge
+    that rewrites the DV-carrying file must emit the killed row exactly
+    once: the merge's pre-image is read with the earlier DVs applied."""
+    t = _mk(spark, tmp_table_root, n=10, buckets=1)
     v0 = t.latest_version()
-    equality_delete_keys(t, spark.createDataFrame([Row(k=1)]), ["k"])
+    mor_delete_keys(t, spark.createDataFrame([Row(k=1)]), ["k"])
     merge_into(
         t, _df(spark, [(2, "updated"), (99, "new")]),
         on=["k"], when_matched_update="all",
@@ -327,36 +225,32 @@ def test_changelog_spans_equality_delete_then_merge(spark, tmp_table_root):
     rows = t.read_changelog(v0).collect()
     ch = sorted((r.k, r._change_type, r._commit_version) for r in rows)
     # MULTISET assertion including version: a set of (k, type) tuples would
-    # collapse the spurious duplicate (1, 'delete') that the un-narrowed
-    # pre-image bug emitted at the merge's rewrite version (rows already
-    # killed by the equality delete resurrecting as deletes again).
+    # collapse the spurious duplicate (1, 'delete') an un-narrowed pre-image
+    # emits at the merge's rewrite version (the row already killed by the
+    # DV resurrecting as a delete again).
     assert ch == [
         (1, "delete", v0 + 1),
         (2, "update_postimage", v0 + 2),
         (99, "insert", v0 + 2),
     ]
-    assert sum(1 for k, typ, _ in ch if k == 1 and typ == "delete") == 1
 
 
-def test_dv_edv_refs_survive_checkpoint(spark, tmp_table_root):
-    """Snapshot checkpoints must carry positional-DV and equality-delete
-    refs: a snapshot rebuilt FROM a checkpoint (log replay skipped) has to
-    keep filtering the dead rows."""
+def test_dv_refs_survive_checkpoint(spark, tmp_table_root):
+    """Snapshot checkpoints must carry positional-DV refs: a snapshot
+    rebuilt FROM a checkpoint (log replay skipped) has to keep filtering
+    the dead rows."""
     import glob
     import os
 
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
-
     t = _mk(spark, tmp_table_root, n=12, buckets=2)
     delete(t, F.col("k") == 2, mode="mor")
-    equality_delete_keys(t, spark.createDataFrame([Row(k=5)]), ["k"])
+    mor_delete_keys(t, spark.createDataFrame([Row(k=5)]), ["k"])
     # push past the checkpoint cadence (every 16 commits)
     for i in range(16):
         t.append(_df(spark, [(100 + i, f"x{i}")]))
     assert t._available_checkpoints(), "expected a checkpoint to exist"
     snap_cp = t.snapshot()
     assert any(m.get("dv") for m in snap_cp.files.values())
-    assert any(m.get("edv") for m in snap_cp.files.values())
     live = sorted(r.k for r in t.read().collect())
     assert 2 not in live and 5 not in live and 100 in live
     # force a full log replay (checkpoints hidden) — must agree exactly
@@ -370,3 +264,44 @@ def test_dv_edv_refs_survive_checkpoint(spark, tmp_table_root):
     finally:
         for p in hidden:
             os.rename(p + ".hidden", p)
+
+
+def test_legacy_equality_delete_refs_refuse_to_read(spark, tmp_table_root):
+    """Equality-delete ('edv') refs are a format of earlier releases that
+    this one no longer applies. A live file carrying one — from a log
+    entry or from a checkpoint's file metadata — must fail loudly: a plain
+    read would bring its deleted rows back."""
+    import json
+
+    import pytest
+
+    t = _mk(spark, tmp_table_root, n=6, buckets=1)
+    p = sorted(t.snapshot().files)[0]
+    v = t.latest_version() + 1
+    t.store.put_if_absent(t._log_path(v), json.dumps({
+        "operation": "delete", "add": [], "remove": [], "properties": {},
+        "summary": {}, "edv": {p: ["data/_edv/legacy.parquet"]},
+    }).encode())
+    for read in (t.snapshot, t.read):
+        with pytest.raises(ValueError, match=rf"v{v} left an equality-delete"):
+            read()
+    # a compaction by the earlier release removes the ref-carrying file:
+    # the table reads again
+    t.store.put_if_absent(t._log_path(v + 1), json.dumps({
+        "operation": "compact", "add": [], "remove": [p], "properties": {},
+        "summary": {},
+    }).encode())
+    assert p not in t.snapshot().files
+    # the same ref carried in by a checkpoint
+    cp = json.loads(t.store.read_bytes(t._log_path(1)))
+    t.store.put_if_absent(t._checkpoint_path(v + 2), json.dumps({
+        "version": v + 2, "schema": cp["schema"], "key_cols": ["k"],
+        "num_buckets": 1, "properties": {},
+        "files": {p: {"rows": 6, "bucket": 0, "edv": ["data/_edv/legacy.parquet"]}},
+    }).encode())
+    t.store.put_if_absent(t._log_path(v + 2), json.dumps({
+        "operation": "append", "add": [], "remove": [], "properties": {},
+        "summary": {},
+    }).encode())
+    with pytest.raises(ValueError, match=rf"v{v + 2} left an equality-delete"):
+        t.read()

@@ -319,15 +319,15 @@ def test_ivm_avg_output_name_collision_raises(spark, tmp_table_root):
 
 
 def test_ivm_survives_equality_delete_then_rewrite(spark, tmp_table_root):
-    """Regression for the changelog edv-narrowing bug: a rewrite (merge)
-    that removes files carrying only EQUALITY-delete refs must not
-    resurrect the already-dead rows as duplicate 'delete' changelog rows —
-    an IVM consumer would double-decrement and silently drift (negative
-    cnt / wrong sums)."""
-    from techtalk_data_pipeline_snowpark_spark.lake import equality_delete_keys
+    """Regression for the changelog pre-image narrowing: a rewrite (merge)
+    that removes a file carrying a key-set delete's DVs must not resurrect
+    the already-dead rows as duplicate 'delete' changelog rows — an IVM
+    consumer would double-decrement and silently drift (negative cnt /
+    wrong sums). One bucket, so the merge rewrites the DV'd file."""
+    from techtalk_data_pipeline_snowpark_spark.lake import mor_delete_keys
 
     t = LakeTable.create(
-        spark, tmp_table_root + "/src", SCHEMA, key_cols=["repo", "path"], num_buckets=2
+        spark, tmp_table_root + "/src", SCHEMA, key_cols=["repo", "path"], num_buckets=1
     )
     view = IncrementalAggView(
         spark, t, tmp_table_root + "/view", group_cols=["repo"],
@@ -336,9 +336,9 @@ def test_ivm_survives_equality_delete_then_rewrite(spark, tmp_table_root):
     t.append(_df(spark, [("a", f"p{i}", 10) for i in range(4)]))
     view.refresh()
     assert _view_state(view) == _recompute(t)
-    # equality-delete one key, then a merge on OTHER keys rewrites the
-    # same files — exactly the double-delete sequence
-    equality_delete_keys(
+    # delete one key by key set, then a merge on OTHER keys rewrites the
+    # same file — exactly the double-delete sequence
+    mor_delete_keys(
         t, spark.createDataFrame([Row(repo="a", path="p1")]), ["repo", "path"]
     )
     merge_into(

@@ -534,7 +534,8 @@ def test_vacuum_reclaims_crash_leaked_staging_dirs(spark, tmp_table_root):
         spark, tmp_table_root, SCHEMA, key_cols=["repo", "path"], num_buckets=2
     )
     t.append(_df(spark, [("a", "1", "x")]))
-    # simulate three crashed writers (data / dv / edv stages), backdated
+    # simulate three crashed writers (data / dv stages, and an edv stage
+    # an earlier release leaked), backdated
     old = time.time() - 100_000
     for name in (".staging-deadbeef", ".staging-dv-deadbeef", ".staging-edv-deadbeef"):
         d = os.path.join(tmp_table_root, name, "_b=0")
@@ -600,7 +601,7 @@ def test_bin_pack_compact_leaves_target_files_alone(spark, tmp_table_root):
 
 
 def test_bin_pack_compact_absorbs_tombstones_whatever_the_size(spark, tmp_table_root):
-    """A file carrying DV/equality-delete refs is rewritten even when it
+    """A file carrying DV refs is rewritten even when it
     is over the size target — bin-packing must still absorb tombstones."""
     from techtalk_data_pipeline_snowpark_spark.lake.merge import delete
 
@@ -617,9 +618,7 @@ def test_bin_pack_compact_absorbs_tombstones_whatever_the_size(spark, tmp_table_
     res = t.compact(bin_pack_rows=10)  # every file is over-target
     assert res.summary["files_compacted"] >= 1
     snap = t.snapshot()
-    assert not any(
-        (m or {}).get("dv") or (m or {}).get("edv") for m in snap.files.values()
-    )
+    assert not any((m or {}).get("dv") for m in snap.files.values())
     assert t.read().count() == 299
     got = {r.repo for r in t.read().collect()}
     assert "r7" not in got and "r8" in got

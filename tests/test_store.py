@@ -20,7 +20,6 @@ from techtalk_data_pipeline_snowpark_spark.lake import (
     FakeObjectStore,
     LakeTable,
     delete,
-    equality_delete_keys,
     merge_into,
     mor_delete_keys,
     update,
@@ -98,11 +97,11 @@ def test_lifecycle_on_object_store(spark, obj_table, monkeypatch):
     got = {(r.repo, r.content) for r in t.read().collect()}
     assert got == {("a", "x2"), ("c", "cc"), ("e", "v")}
 
-    # merge-on-read deletion vector, then equality delete
+    # merge-on-read deletion vectors: two key-set deletes
     mor_delete_keys(
         t, spark.createDataFrame([("a", "1")], ["repo", "path"]), ["repo", "path"]
     )
-    equality_delete_keys(
+    mor_delete_keys(
         t, spark.createDataFrame([("c", "3")], ["repo", "path"]), ["repo", "path"]
     )
     assert {r.repo for r in t.read().collect()} == {"e"}
