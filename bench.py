@@ -1,7 +1,7 @@
 """Benchmark harness — prints ONE JSON line.
 
 Headline: end-to-end CDC replay→merge throughput (change-events/sec) on a
-deterministic synthetic event log (zipf-skewed hot repos, salted dedup),
+deterministic synthetic event log (zipf-skewed hot repos),
 plus per-query timings of the analytics/training-data operators at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 

@@ -35,7 +35,6 @@ def run_seed(spark, seed: int) -> None:
     )
     cfg = dict(
         num_buckets=rng.choice([4, 8]),
-        salted=rng.random() < 0.5,
         bloom=rng.random() < 0.5,
     )
     if rng.random() < 0.34:

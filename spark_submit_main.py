@@ -8,7 +8,7 @@ multi-executor cluster"):
         spark_submit_main.py \
         --events /path/to/change_events_parquet \
         --table  /path/to/lake_table \
-        --epochs 8 --salted
+        --epochs 8
 
 On a cluster, pass ``--master yarn``/``k8s://…`` and executor conf to
 spark-submit; this script only builds the session via getOrCreate so all
@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--max-lsn", type=int, default=None)
     p.add_argument("--keys", default="repo,path")
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--salted", action="store_true")
     p.add_argument("--gen-only", action="store_true",
                    help="generate the event log (--gen-events) and exit")
     p.add_argument("--no-pandas-udfs", action="store_true",
@@ -171,7 +170,6 @@ def main(argv: list[str] | None = None) -> int:
         args.table,
         key_cols=tuple(args.keys.split(",")),
         num_buckets=args.buckets,
-        salted=args.salted,
         use_pandas_udfs=not args.no_pandas_udfs,
         broadcast_key_limit=args.broadcast_limit,
         quarantine_dir=args.quarantine_dir,

@@ -1,4 +1,4 @@
-from .dedup import dedup_latest, dedup_latest_salted, dedup_latest_window
+from .dedup import dedup_latest, dedup_latest_window
 from .engine import CdcEngine, EpochAuditError, EpochResult
 from .multitable import MultiTableCdcEngine, TableRoute
 from .schema_evolution import SchemaEvolutionError, reconcile
@@ -11,7 +11,6 @@ __all__ = [
     "SchemaEvolutionError",
     "TableRoute",
     "dedup_latest",
-    "dedup_latest_salted",
     "dedup_latest_window",
     "reconcile",
 ]

@@ -9,10 +9,10 @@ shuffle), which a `Window.partitionBy(key)` + row_number never gets. At
 one row per map task *before* the shuffle — the single most important
 scale property of this stage. The window variant is kept for parity tests.
 
-Skew: partial agg already defuses most hot-key pressure; for adversarial
-skew (one key dominating a whole stage), ``dedup_latest_salted`` does an
-explicit two-phase reduction over (key, salt) then (key) — SURVEY.md §4
-item 2.
+The CDC epoch runs one payload path: ``winner_keys`` reduces a
+column-pruned (key, lsn, op) scan, and ``dedup_latest_via_winners``
+semi-joins the full payload against those winners before the one max_by
+pass, so losing rows' content never enters an aggregation buffer.
 
 Tie-break: LSNs are unique by contract; if a tie ever appears (duplicate
 delivery of the same LSN) the ordering key struct(lsn, ts, op) makes the
@@ -43,28 +43,6 @@ def dedup_latest(events: DataFrame, key_cols: list[str]) -> DataFrame:
     return agg.select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload_cols])
 
 
-def dedup_latest_salted(
-    events: DataFrame, key_cols: list[str], num_salts: int = 16
-) -> DataFrame:
-    """Two-phase salted reduction for adversarial key skew.
-
-    Phase 1 groups by (key, salt) — hot keys split across ``num_salts``
-    reducers; phase 2 reduces the ≤num_salts survivors per key. Salt is
-    derived from the LSN (deterministic, partitioning-independent)."""
-    payload_cols = [c for c in events.columns if c not in key_cols]
-    salted = events.withColumn("_salt", F.pmod(F.xxhash64("lsn"), F.lit(num_salts)))
-    p1 = salted.groupBy(*key_cols, "_salt").agg(
-        F.max_by(
-            F.struct(*[F.col(c) for c in payload_cols]), _order_key(events.columns)
-        ).alias("_w")
-    )
-    order2 = ["_w.lsn"] + [f"_w.{c}" for c in ("ts", "op") if c in events.columns]
-    p2 = p1.groupBy(*key_cols).agg(
-        F.max_by(F.col("_w"), F.struct(*order2)).alias("_w")
-    )
-    return p2.select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload_cols])
-
-
 def winner_keys(events: DataFrame, key_cols: list[str]) -> DataFrame:
     """(key..., lsn, op) of the last writer per key — the late-
     materialization half of the dedup.
@@ -91,14 +69,17 @@ def dedup_latest_via_winners(
     the winner (key, lsn) set map-side (broadcast), then a max_by pass for
     exact-duplicate delivery defense.
 
-    Payload bytes cross a shuffle at most ONCE (the groupBy, whose key
-    hash-partitioning the downstream MERGE join reuses): broadcast=True
-    makes the semi-join a map-side filter — losing rows' content never
-    enters an aggregation buffer OR a shuffle.
+    broadcast=True makes the semi-join a map-side filter, so losing rows'
+    content never enters an aggregation buffer or a shuffle; the payload
+    then crosses one shuffle here (the max_by groupBy). The downstream
+    MERGE join shuffles it again: its ``eqNullSafe`` keys hash on
+    ``coalesce``/``isnull`` expressions rather than the bare key columns,
+    and the Arrow transform between the two (``ArrowEvalPython``) does not
+    pass on its child's partitioning.
 
-    broadcast=False keeps the ONE payload shuffle by joining on the KEY
-    COLUMNS ONLY (winners are key-unique, so an inner join + post-filter
-    ``lsn == winner_lsn`` is the same semi-join) — joining on (keys…, lsn)
+    broadcast=False keeps the dedup to one payload shuffle by joining on
+    the KEY COLUMNS ONLY (winners are key-unique, so an inner join +
+    post-filter ``lsn == winner_lsn`` is the same semi-join) — joining on (keys…, lsn)
     would make the planner shuffle by all three columns
     (requireAllClusterKeysForCoPartition), which the following
     groupBy(keys) could not reuse: content would cross TWO shuffles

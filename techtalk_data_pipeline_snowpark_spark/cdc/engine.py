@@ -5,8 +5,8 @@ MERGE-in-transaction pattern (IngestOrdersFromRawToFlat.scala:63-98 via
 executeInTransaction, SnowflakeUtils.scala:68-81): an *epoch* is a half-open
 LSN range ``(last_applied, last_applied + step]``; its events are
 
-    sliced → schema-reconciled → vectorized-transformed (pandas/Arrow UDFs)
-    → max-LSN deduped → MERGE'd into the lake table
+    sliced → schema-reconciled → max-LSN deduped → vectorized-transformed
+    (one fused Arrow UDF) → MERGE'd into the lake table
 
 and the epoch manifest (epoch id, LSN range, per-bucket offsets, lineage,
 merge metrics) is committed **in the same atomic log entry as the data** —
@@ -17,8 +17,10 @@ delivery and crash-resume are both safe: exactly-once *effects*.
 Scale notes:
 - the epoch slice filter (`lsn > a AND lsn <= b`) is a plain predicate →
   pushed into the parquet/lake scan of the event log (PushedFilters).
-- dedup uses max_by partial aggregation (see cdc/dedup.py) — hot repos are
-  collapsed map-side; `salted=True` adds an explicit two-phase reduction.
+- dedup has one payload path (see cdc/dedup.py): a column-pruned winner
+  (key, lsn, op) reduction with map-side partial aggregation, then a
+  semi-join of the payload against the winners (broadcast up to
+  ``broadcast_key_limit`` winners, shuffled beyond) and one max_by pass.
 - MERGE rewrites only the buckets the epoch touches (lake/merge.py).
 """
 
@@ -33,10 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import (
-    canonicalize_content,
     canonicalize_content_sql,
     normalize_and_canonicalize,
-    normalize_lang,
     normalize_lang_sql,
     sha256_hex,
 )
@@ -47,11 +47,7 @@ from ..lake import (
     merge_into,
     mor_delete_keys,
 )
-from .dedup import (
-    dedup_latest_salted,
-    dedup_latest_via_winners,
-    winner_keys,
-)
+from .dedup import dedup_latest_via_winners, winner_keys
 from .schema_evolution import reconcile
 
 ENGINE_COLS = {"op"}
@@ -88,8 +84,6 @@ class CdcEngine:
         table_root: str,
         key_cols: tuple[str, ...] = ("repo", "path"),
         num_buckets: int = 32,
-        salted: bool = False,
-        num_salts: int = 16,
         use_pandas_udfs: bool = True,
         broadcast_key_limit: int = 2_000_000,
         quarantine_dir: str | None = None,
@@ -100,13 +94,10 @@ class CdcEngine:
         self.table_root = table_root
         self.key_cols = list(key_cols)
         self.num_buckets = num_buckets
-        self.salted = salted
-        self.num_salts = num_salts
         self.use_pandas_udfs = use_pandas_udfs
         # winner sets up to this many keys are broadcast for the payload
         # semi-join (map-side, zero payload shuffle); larger epochs fall
-        # back to a shuffled semi-join whose key partitioning the merge
-        # join then reuses.
+        # back to a shuffled semi-join on the key columns.
         self.broadcast_key_limit = broadcast_key_limit
         # opt-in per-file key blooms on the lake table (lake/bloom.py):
         # MERGE/DELETE rewrite only files that may contain an epoch key —
@@ -180,45 +171,33 @@ class CdcEngine:
 
     def _transform(self, events: DataFrame) -> DataFrame:
         """Vectorized row transforms (north_star): lang normalization,
-        content canonicalization, sha256 — pandas/Arrow UDFs by default,
-        JVM expressions when use_pandas_udfs=False (bit-identical output,
-        tested).
+        content canonicalization, sha256.
 
-        The two pandas transforms are FUSED into one struct-returning UDF
-        (one Arrow exchange instead of two — content strings dominate the
-        traffic). sha256 is always JVM-side (F.sha2, whole-stage codegen):
-        hashlib has no vectorized form, so a pandas sha UDF would be
-        per-row Python — exactly what the north_star forbids. Parity with
-        sha256_hex_pandas is unit-tested (test_functions.py)."""
+        The pandas path is ONE fused struct-returning Arrow UDF for
+        whichever of ``lang``/``content`` the log carries: an absent column
+        goes in as a typed null literal and its output is dropped. The JVM
+        expressions (use_pandas_udfs=False) are its parity oracle — bit-
+        identical output, tested end to end. sha256 is always JVM-side
+        (F.sha2, whole-stage codegen): hashlib has no vectorized form, so
+        a pandas sha UDF would be per-row Python — exactly what the
+        north_star forbids."""
         is_del = F.col("op") == "delete"
-        cols = set(events.columns)
+        present = [c for c in ("lang", "content") if c in events.columns]
         out = events
-        if self.use_pandas_udfs and "lang" in cols and "content" in cols:
-            packed = normalize_and_canonicalize(F.col("lang"), F.col("content"))
-            out = out.withColumn("_t", packed)
-            out = out.withColumn(
-                "lang", F.when(is_del, F.lit(None)).otherwise(F.col("_t.lang"))
-            ).withColumn(
-                "content", F.when(is_del, F.lit(None)).otherwise(F.col("_t.content"))
-            ).drop("_t")
+        if present and self.use_pandas_udfs:
+            args = [
+                F.col(c) if c in present else F.lit(None).cast("string")
+                for c in ("lang", "content")
+            ]
+            out = out.withColumn("_t", normalize_and_canonicalize(*args))
+            clean = {c: F.col(f"_t.{c}") for c in present}
         else:
-            if "lang" in cols:
-                lang = (
-                    normalize_lang(F.col("lang"))
-                    if self.use_pandas_udfs
-                    else normalize_lang_sql(F.col("lang"))
-                )
-                out = out.withColumn("lang", F.when(is_del, F.lit(None)).otherwise(lang))
-            if "content" in cols:
-                content = (
-                    canonicalize_content(F.col("content"))
-                    if self.use_pandas_udfs
-                    else canonicalize_content_sql(F.col("content"))
-                )
-                out = out.withColumn(
-                    "content", F.when(is_del, F.lit(None)).otherwise(content)
-                )
-        if "content" in cols:
+            sql = {"lang": normalize_lang_sql, "content": canonicalize_content_sql}
+            clean = {c: sql[c](F.col(c)) for c in present}
+        for c, v in clean.items():
+            out = out.withColumn(c, F.when(is_del, F.lit(None)).otherwise(v))
+        out = out.drop("_t")
+        if "content" in present:
             out = out.withColumn(
                 "content_sha256",
                 F.when(is_del, F.lit(None)).otherwise(sha256_hex(F.col("content"))),
@@ -460,23 +439,15 @@ class CdcEngine:
                 _os.path.join(self.quarantine_dir, f"epoch-{lsn_to}")
             )
 
-        # Payload path: salted two-phase reduction for adversarial skew, or
-        # the default winners semi-join (broadcast while the winner set is
-        # driver-manageable, shuffled semi-join beyond that). Dedup runs
-        # BEFORE the row transforms either way: canonicalization of losing
-        # rows would be wasted Arrow traffic.
-        if self.salted:
-            deduped_raw = dedup_latest_salted(sliced, self.key_cols, self.num_salts)
-        else:
-            deduped_raw = dedup_latest_via_winners(
-                sliced, self.key_cols, winners,
-                broadcast=n_events <= self.broadcast_key_limit,
-            )
-        # explicit null-key drop: the winners SEMI-JOIN drops them as a side
-        # effect, but the salted path (a pure groupBy) would carry them into
-        # the merge where the full-outer join can't match them — they'd
-        # materialize as garbage all-null rows. Uniform in both modes.
-        deduped_raw = deduped_raw.where(~null_key)
+        # Payload path: the winners semi-join (broadcast while the winner
+        # set is driver-manageable, shuffled beyond that). Both forms are
+        # equi-joins on the key columns, so null-key events never reach the
+        # merge. Dedup runs BEFORE the row transforms: canonicalization of
+        # losing rows would be wasted Arrow traffic.
+        deduped_raw = dedup_latest_via_winners(
+            sliced, self.key_cols, winners,
+            broadcast=n_events <= self.broadcast_key_limit,
+        )
         dedup = self._transform(deduped_raw)
 
         if n_events == 0:

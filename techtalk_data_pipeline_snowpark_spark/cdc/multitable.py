@@ -74,7 +74,7 @@ class TableRoute:
     logs (the normal multi-table shape) must name their columns so other
     tables' all-null columns don't leak into this table's schema.
     ``num_buckets`` / ``engine_kwargs``: per-table layout and any
-    :class:`CdcEngine` keyword (salted, bloom, quarantine_dir, ...).
+    :class:`CdcEngine` keyword (bloom, quarantine_dir, ...).
     """
 
     key_cols: tuple[str, ...]

@@ -9,22 +9,18 @@ from .shims import (
 )
 from .text import (
     bpe_ish_token_count,
-    canonicalize_content,
     canonicalize_content_sql,
     doc_fingerprint,
     lang_id,
     normalize_and_canonicalize,
-    normalize_lang,
     normalize_lang_sql,
     quality_score,
     sha256_hex,
-    sha256_hex_pandas,
     token_count,
 )
 
 __all__ = [
     "bpe_ish_token_count",
-    "canonicalize_content",
     "canonicalize_content_sql",
     "dateadd",
     "doc_fingerprint",
@@ -32,11 +28,9 @@ __all__ = [
     "json_array_to_exploded_fields",
     "lang_id",
     "normalize_and_canonicalize",
-    "normalize_lang",
     "normalize_lang_sql",
     "quality_score",
     "sha256_hex",
-    "sha256_hex_pandas",
     "substring1",
     "sysdate",
     "token_count",

@@ -5,8 +5,10 @@ content canonicalization) run as vectorized pandas/Arrow UDFs with zero
 per-row Python". Everything here operates on whole pandas Series with
 vectorized str/numpy ops; data crosses JVM↔Python as Arrow batches.
 
-Where a pure-JVM built-in exists (sha256 → F.sha2) the built-in is the hot
-path and the pandas UDF is kept only for parity testing.
+The CDC row transform is one fused Arrow UDF (``normalize_and_canonicalize``);
+its JVM twins (``normalize_lang_sql``/``canonicalize_content_sql``) are the
+parity oracle and serve JVM-only callers. Where a pure-JVM built-in exists
+(sha256 → F.sha2) the built-in is the only path.
 
 Also: text-analysis operators for training-data pipelines — language ID
 (stopword n-gram heuristic), quality scoring, token counting, document
@@ -14,8 +16,6 @@ fingerprinting — expressed JVM-side where possible.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import pandas as pd
 from pyspark.sql import Column
@@ -31,13 +31,10 @@ def sha256_hex(col: Column | str) -> Column:
     return F.lower(F.sha2(c.cast("string"), 256))
 
 
-@pandas_udf(T.StringType())
-def sha256_hex_pandas(s: pd.Series) -> pd.Series:
-    """Arrow-batched parity implementation (tested equal to sha256_hex)."""
-    return s.fillna("").map(lambda x: hashlib.sha256(x.encode("utf-8")).hexdigest())
-
-
 # ----------------------------------------------- language normalization
+# Messy lang labels ('Python', 'PY3', 'Golang') → canonical set, fallback
+# 'unknown'. (The reference has no lang column; this is the north_star's
+# lang-detection normalization.)
 
 _LANG_ALIASES = {
     "py": "python", "py3": "python", "python3": "python", "python": "python",
@@ -50,18 +47,9 @@ _LANG_ALIASES = {
 }
 
 
-@pandas_udf(T.StringType())
-def normalize_lang(s: pd.Series) -> pd.Series:
-    """Messy lang labels ('Python', 'PY3', 'Golang') → canonical set.
-
-    Vectorized: lower-case + dict map, fallback 'unknown'. (The reference has
-    no lang column; this is the north_star's lang-detection normalization.)
-    """
-    return s.fillna("").str.strip().str.lower().map(_LANG_ALIASES).fillna("unknown")
-
-
 def normalize_lang_sql(col: Column | str) -> Column:
-    """JVM-side equivalent of normalize_lang (for oracle-parity paths)."""
+    """JVM-side lang normalization — the parity oracle of the fused UDF's
+    ``lang`` output."""
     c = F.col(col) if isinstance(col, str) else col
     lowered = F.lower(F.trim(c))
     expr = F.lit("unknown")
@@ -71,20 +59,6 @@ def normalize_lang_sql(col: Column | str) -> Column:
 
 
 # ----------------------------------------------- content canonicalization
-
-@pandas_udf(T.StringType())
-def canonicalize_content(s: pd.Series) -> pd.Series:
-    """Canonical source text: CRLF→LF, strip trailing whitespace per line,
-    exactly one trailing newline. Vectorized pandas str ops."""
-    out = (
-        s.fillna("")
-        .str.replace("\r\n", "\n", regex=False)
-        .str.replace("\r", "\n", regex=False)
-        .str.replace(r"[ \t]+\n", "\n", regex=True)
-        .str.replace(r"[ \t\n]+$", "", regex=True)
-    )
-    return out + "\n"
-
 
 @pandas_udf(
     T.StructType(
@@ -98,12 +72,14 @@ def normalize_and_canonicalize(lang: pd.Series, content: pd.Series) -> pd.DataFr
     """Fused lang-normalization + content-canonicalization in ONE Arrow
     exchange, computed with pyarrow.compute (RE2 kernels in C++).
 
-    Two separate pandas UDFs cost two JVM↔Python round trips of the
-    (large) content strings, and pandas ``.str.replace(regex=True)`` calls
-    Python ``re`` per row (~140µs/row measured at 2M events). The pyarrow
-    kernels are the actual vectorized path — same outputs, RE2 ``$`` =
-    end-of-text matches Java's default exactly (unit-tested parity with
-    canonicalize_content / canonicalize_content_sql)."""
+    Canonical source text: CRLF→LF, strip trailing whitespace per line,
+    exactly one trailing newline. Lang: lower-case + alias map, fallback
+    'unknown'. Two separate UDFs would cost two JVM↔Python round trips of
+    the (large) content strings, and pandas ``.str.replace(regex=True)``
+    calls Python ``re`` per row (~140µs/row measured at 2M events). The
+    pyarrow kernels are the vectorized path — RE2 ``$`` = end-of-text
+    matches Java's default exactly (unit-tested parity with
+    normalize_lang_sql / canonicalize_content_sql)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -119,7 +95,8 @@ def normalize_and_canonicalize(lang: pd.Series, content: pd.Series) -> pd.DataFr
 
 
 def canonicalize_content_sql(col: Column | str) -> Column:
-    """JVM-side equivalent of canonicalize_content."""
+    """JVM-side content canonicalization — the parity oracle of the fused
+    UDF's ``content`` output."""
     c = F.col(col) if isinstance(col, str) else col
     x = F.regexp_replace(F.regexp_replace(c, "\r\n", "\n"), "\r", "\n")
     x = F.regexp_replace(x, "[ \t]+\n", "\n")

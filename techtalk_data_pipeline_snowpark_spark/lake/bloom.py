@@ -202,63 +202,83 @@ def bloom_cols_of(snap) -> list[str]:
     return [c for c in want if kind_of(by.get(c.lower())) is not None]
 
 
+def bloom_specs(schema, cols: list[str] | None) -> list[tuple[str, str]]:
+    """[(col, kind)] of the requested columns that exist in ``schema`` with
+    a bloomable type."""
+    by = {f.name.lower(): f for f in schema.fields}
+    return [
+        (c, kind_of(by[c.lower()].dataType))
+        for c in cols or []
+        if c.lower() in by and kind_of(by[c.lower()].dataType) is not None
+    ]
+
+
+def build_file_blooms(path: str, specs: list[tuple[str, str]]) -> dict | None:
+    """{col: (bitset bytes, m, k, kind)} for one data file, read back
+    column-pruned. Columns with nulls (or an empty file) get no bloom — the
+    file then always survives. None when no column qualifies or the read
+    fails: pruning is an optimization, never a correctness gate."""
+    import pyarrow.parquet as pq
+
+    try:
+        tbl = pq.read_table(path, columns=[c for c, _ in specs])
+        out = {}
+        for c, kind in specs:
+            col = tbl.column(c)
+            if col.null_count > 0 or len(col) == 0:
+                continue
+            vals = _norm_np(col.to_numpy(zero_copy_only=False), kind)
+            m, k = _sized(len(vals))
+            out[c] = (build_bloom(vals, m, k), m, k, kind)
+        return out or None
+    except Exception:
+        return None
+
+
+def pack_blooms(built: list[dict | None]) -> tuple[bytes, list[dict | None]]:
+    """Pack per-file bloom builds into ONE sidecar blob. Returns the blob
+    and, aligned with ``built``, each file's ``{col: {o, n, m, k, t}}``
+    offsets into it (None where the file has no bloom)."""
+    blob = bytearray()
+    metas: list[dict | None] = []
+    for res in built:
+        colmeta = None
+        if res:
+            colmeta = {}
+            for c, (buf, m, k, kind) in res.items():
+                colmeta[c] = {"o": len(blob), "n": len(buf), "m": m, "k": k, "t": kind}
+                blob += buf
+        metas.append(colmeta)
+    return bytes(blob), metas
+
+
+def bloom_meta(ref: str, colmeta: dict) -> dict:
+    """The add-entry ``bf`` meta of one file whose bitsets live in ``ref``."""
+    return {"ref": ref, "cols": colmeta, "a": BF_ALGO}
+
+
 def enrich_adds_with_blooms(table, adds: list[dict], schema, cols: list[str]) -> None:
     """Build per-column blooms for freshly staged files and attach ``bf``
     meta to each add-entry, packing all bitsets into ONE sidecar blob per
     commit (``data/_bf/<uuid>.bin``) written through the TableStore.
-    Any per-file failure degrades to a bloom-less entry — pruning is an
-    optimization, never a correctness gate."""
-    if not adds or not cols:
+    Any per-file failure degrades to a bloom-less entry."""
+    specs = bloom_specs(schema, cols)
+    if not adds or not specs:
         return
-    import pyarrow.parquet as pq
-
-    by = {f.name.lower(): f for f in schema.fields}
-    specs = [
-        (c, kind_of(by[c.lower()].dataType))
-        for c in cols
-        if c.lower() in by and kind_of(by[c.lower()].dataType) is not None
-    ]
-    if not specs:
-        return
-
-    def _one(a):
-        try:
-            tbl = pq.read_table(
-                os.path.join(table.root, a["path"]), columns=[c for c, _ in specs]
-            )
-            out = {}
-            for c, kind in specs:
-                col = tbl.column(c)
-                if col.null_count > 0 or len(col) == 0:
-                    continue  # null keys / empty file → file always survives
-                vals = _norm_np(col.to_numpy(zero_copy_only=False), kind)
-                m, k = _sized(len(vals))
-                out[c] = (build_bloom(vals, m, k), m, k, kind)
-            return out or None
-        except Exception:
-            return None
-
+    paths = [os.path.join(table.root, a["path"]) for a in adds]
     with ThreadPoolExecutor(max_workers=min(16, len(adds))) as ex:
-        built = list(ex.map(_one, adds))
-    blob = bytearray()
-    metas: list[tuple[dict, dict]] = []
-    for a, res in zip(adds, built):
-        if not res:
-            continue
-        colmeta = {}
-        for c, (buf, m, k, kind) in res.items():
-            colmeta[c] = {"o": len(blob), "n": len(buf), "m": m, "k": k, "t": kind}
-            blob += buf
-        metas.append((a, colmeta))
-    if not metas:
+        built = list(ex.map(lambda p: build_file_blooms(p, specs), paths))
+    blob, metas = pack_blooms(built)
+    if not blob:
         return
     from .table import DATA_DIR
 
     rel = f"{DATA_DIR}/_bf/{uuid.uuid4().hex}.bin"
     table.store.ensure_dir(f"{DATA_DIR}/_bf")
-    table.store.put_if_absent(rel, bytes(blob))
-    for a, colmeta in metas:
-        a["bf"] = {"ref": rel, "cols": colmeta, "a": BF_ALGO}
+    table.store.put_if_absent(rel, blob)
+    for a, colmeta in zip(adds, metas):
+        if colmeta:
+            a["bf"] = bloom_meta(rel, colmeta)
 
 
 def _load_file_blooms(table, metas, cols, by_kind):

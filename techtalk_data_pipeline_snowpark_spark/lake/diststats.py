@@ -13,19 +13,21 @@ blessed shape: "a distributed follow-up pass over the staged files"):
   across the cluster's task slots;
 - each task reads its files' footers (zone-map min/max/null-count — the
   same `collect_file_stats` the driver path uses) and, when blooms are
-  enabled, the key columns (same `_norm_np`/`build_bloom` pipeline — the
-  bloom bit-parity property holds by construction because both paths run
-  the identical functions, just in a different process);
-- each task packs ALL its files' bloom bitsets into ONE sidecar blob and
-  writes it through the serialized :class:`TableStore` (executors talk to
-  the object store directly, like Iceberg puffin writers);
+  enabled, builds each file's blooms with the driver path's own
+  `build_file_blooms` — the bloom bit-parity property holds by
+  construction because both paths run the identical function, just in a
+  different process;
+- each task packs ALL its files' bloom bitsets into ONE sidecar blob
+  (`pack_blooms`, the driver path's packing) and writes it through the
+  serialized :class:`TableStore` (executors talk to the object store
+  directly, like Iceberg puffin writers);
 - only O(per-file-meta) rows return to the driver: path index, row count,
   stats dict, bloom meta with the task-blob ref.
 
 The driver-threaded path remains the small-commit fast path: a Spark job
 costs ~0.1-0.3 s of scheduling, so commits staging less than
-``DIST_MIN_BYTES`` (default 32 MiB, env ``SPARK_GRAFT_STATS_DIST_MIN_BYTES``)
-keep the latency-optimal driver pool. Above it, driver work per commit is
+``DIST_MIN_BYTES`` (32 MiB; ≤ 0 distributes every commit) keep the
+latency-optimal driver pool. Above it, driver work per commit is
 O(file-count meta), independent of data volume. Any job-level failure
 degrades to the driver path — enrichment is an optimization tier, never a
 correctness gate (files without stats/blooms simply always survive
@@ -42,17 +44,10 @@ from __future__ import annotations
 import json
 import os
 
-from .bloom import BF_ALGO, _norm_np, _sized, build_bloom, kind_of
+from .bloom import bloom_meta, bloom_specs, build_file_blooms, pack_blooms
 from .stats import collect_file_stats, stats_columns
 
 DIST_MIN_BYTES = 32 * 1024 * 1024
-
-
-def _threshold() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_STATS_DIST_MIN_BYTES", ""))
-    except ValueError:
-        return DIST_MIN_BYTES
 
 
 def should_distribute(table, adds: list[dict]) -> bool:
@@ -61,13 +56,12 @@ def should_distribute(table, adds: list[dict]) -> bool:
     metadata request per file, and only until the threshold is crossed)."""
     if not adds:
         return False
-    thresh = _threshold()
-    if thresh <= 0:
+    if DIST_MIN_BYTES <= 0:
         return True
     total = 0
     for a in adds:
         total += table.store.size(a["path"])
-        if total >= thresh:
+        if total >= DIST_MIN_BYTES:
             return True
     return False
 
@@ -88,12 +82,7 @@ def enrich_adds_distributed(
     root = table.root
     store = table.store
     cols = stats_columns(schema)
-    by = {f.name.lower(): f for f in schema.fields}
-    specs = [
-        (c, kind_of(by[c.lower()].dataType))
-        for c in (bloom_cols or [])
-        if c.lower() in by and kind_of(by[c.lower()].dataType) is not None
-    ]
+    specs = bloom_specs(schema, bloom_cols)
     from .table import DATA_DIR
 
     if specs:
@@ -106,16 +95,14 @@ def enrich_adds_distributed(
 
     def run(batches):
         import pandas as pd
-        import pyarrow.parquet as pq
 
         items: list[tuple[int, str]] = []
         for b in batches:
             items.extend(zip(b["i"].tolist(), b["path"].tolist()))
         if not items:
             return
-        out = {"i": [], "rows": [], "stats": [], "bf": []}
-        blob = bytearray()
-        pending: list[tuple[int, dict]] = []  # (out-row idx, bf colmeta)
+        out = {"i": [], "rows": [], "stats": []}
+        built = []
         for i, rel in items:
             absp = os.path.join(root, rel)
             n_rows = st = None
@@ -126,45 +113,24 @@ def enrich_adds_distributed(
             out["i"].append(i)
             out["rows"].append(n_rows)
             out["stats"].append(json.dumps(st) if st else None)
-            out["bf"].append(None)
-            if not specs:
-                continue
-            try:
-                tbl = pq.read_table(absp, columns=[c for c, _ in specs])
-                colmeta = {}
-                for c, kind in specs:
-                    col = tbl.column(c)
-                    if col.null_count > 0 or len(col) == 0:
-                        continue  # null keys / empty → file always survives
-                    vals = _norm_np(col.to_numpy(zero_copy_only=False), kind)
-                    m, k = _sized(len(vals))
-                    buf = build_bloom(vals, m, k)
-                    colmeta[c] = {
-                        "o": len(blob), "n": len(buf), "m": m, "k": k, "t": kind
-                    }
-                    blob += buf
-                if colmeta:
-                    pending.append((len(out["bf"]) - 1, colmeta))
-            except Exception:
-                pass
-        if pending:
+            built.append(build_file_blooms(absp, specs) if specs else None)
+        blob, metas = pack_blooms(built)
+        ref = None
+        if blob:
             import uuid as _uuid
 
             ref = f"{bf_dir}/{_uuid.uuid4().hex}.bin"
             try:
-                store.put_if_absent(ref, bytes(blob))
+                store.put_if_absent(ref, blob)
             except Exception:
-                pending = []  # blob lost → entries stay bloom-less
-            for row_idx, colmeta in pending:
-                out["bf"][row_idx] = json.dumps(
-                    {"ref": ref, "cols": colmeta, "a": BF_ALGO}
-                )
+                ref = None  # blob lost → entries stay bloom-less
+        bf = [json.dumps(bloom_meta(ref, cm)) if ref and cm else None for cm in metas]
         yield pd.DataFrame(
             {
                 "i": pd.Series(out["i"], dtype="int64"),
                 "rows": pd.Series(out["rows"], dtype="Int64"),
                 "stats": pd.Series(out["stats"], dtype="object"),
-                "bf": pd.Series(out["bf"], dtype="object"),
+                "bf": pd.Series(bf, dtype="object"),
             }
         )
 

@@ -73,11 +73,10 @@ def dedup_ingest(table, batch: DataFrame, text_col: str, id_col: str):
     Returns the merge CommitResult."""
     from ..lake.merge import merge_into
 
-    # NULL text hashes as the empty string (the sha256_hex_pandas
-    # convention): a NULL content_hash would be silently dropped by the
-    # winner join AND would violate the lake's non-null merge-key
-    # convention — empty-fetch documents dedup together instead of
-    # vanishing.
+    # NULL text hashes as the empty string: a NULL content_hash would be
+    # silently dropped by the winner join AND would violate the lake's
+    # non-null merge-key convention — empty-fetch documents dedup together
+    # instead of vanishing.
     hashed = batch.withColumn(
         "content_hash", sha256_hex(F.coalesce(F.col(text_col), F.lit("")))
     )

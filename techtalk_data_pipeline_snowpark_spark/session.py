@@ -27,6 +27,10 @@ _DEFAULTS = {
     # Source files land with case-insensitive field names (reference
     # `get_ignore_case`); Spark default caseSensitive=false already matches.
     "spark.sql.caseSensitive": "false",
+    # ANSI pinned, not inherited from the Spark default: narrowing casts
+    # (operators/importance.py's decimal(9,0)) must fail loudly on
+    # overflow instead of silently yielding NULL.
+    "spark.sql.ansi.enabled": "true",
     "spark.ui.enabled": "false",
     "spark.driver.extraJavaOptions": "-Djava.net.preferIPv4Stack=true",
 }

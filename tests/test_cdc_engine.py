@@ -1,6 +1,6 @@
 """End-to-end CDC replay vs pandas oracle (SURVEY.md §5 items 2-4, 6):
 final-state equality incl. per-row sha256(content), exactly-once resume,
-duplicate delivery, schema evolution, salted-vs-plain parity."""
+duplicate delivery, schema evolution, pandas-vs-JVM transform parity."""
 
 import math
 
@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from techtalk_data_pipeline_snowpark_spark.cdc import CdcEngine, dedup_latest, dedup_latest_salted, dedup_latest_window
+from techtalk_data_pipeline_snowpark_spark.cdc import CdcEngine, dedup_latest, dedup_latest_window
 from techtalk_data_pipeline_snowpark_spark.fixtures.generators import (
     change_events,
     change_events_evolution,
@@ -143,21 +143,34 @@ def test_all_delete_epoch(spark, tmp_path):
     assert engine.read_state().count() > 0
 
 
-def test_salted_equals_plain(spark, tmp_path):
-    ev = change_events(spark, 2000, n_repos=3, paths_per_repo=4, zipf_s=2.0, seed=13)
-    plain = CdcEngine(spark, str(tmp_path / "p"), num_buckets=4, salted=False)
-    plain.replay(ev, epoch_size=10**9)
-    salted = CdcEngine(spark, str(tmp_path / "s"), num_buckets=4, salted=True, num_salts=8)
-    salted.replay(ev, epoch_size=10**9)
-    _assert_state_equal(_final_state_pdf(plain), _final_state_pdf(salted))
+@pytest.mark.parametrize(
+    "drop", [(), ("lang",), ("content",)], ids=["lang+content", "content", "lang"]
+)
+def test_pandas_udfs_equal_jvm_oracle(spark, tmp_path, drop):
+    """The fused Arrow UDF and the JVM expressions (use_pandas_udfs=False,
+    the parity oracle) give an identical final state for every log shape:
+    both transform columns, and each one alone (the absent column goes into
+    the fused UDF as a typed null and its output is dropped)."""
+    ev = change_events(spark, 300, n_repos=5, paths_per_repo=10, seed=23).drop(*drop)
+    states = []
+    for pandas_udfs in (True, False):
+        eng = CdcEngine(spark, str(tmp_path / f"p{pandas_udfs}"), num_buckets=4,
+                        use_pandas_udfs=pandas_udfs)
+        eng.replay(ev, epoch_size=10**9)
+        states.append(_final_state_pdf(eng))
+    fused, jvm = states
+    assert len(fused) > 0
+    assert list(fused.columns) == list(jvm.columns)
+    assert not set(drop) & set(fused.columns)
+    assert ("content_sha256" in fused.columns) == ("content" not in drop)
+    _assert_state_equal(fused, jvm)
 
 
 def test_dedup_variants_agree(spark):
     ev = change_events(spark, 2000, n_repos=5, paths_per_repo=5, seed=17)
     a = dedup_latest(ev, ["repo", "path"]).orderBy("repo", "path").collect()
-    b = dedup_latest_salted(ev, ["repo", "path"], 8).orderBy("repo", "path").collect()
     c = dedup_latest_window(ev, ["repo", "path"]).select(*[f.name for f in dedup_latest(ev, ["repo", "path"]).schema]).orderBy("repo", "path").collect()
-    assert [r.lsn for r in a] == [r.lsn for r in b] == [r.lsn for r in c]
+    assert [r.lsn for r in a] == [r.lsn for r in c]
 
 
 def test_dedup_via_winners_agrees(spark):
@@ -596,10 +609,11 @@ def test_null_key_events_quarantined_and_counted(spark, tmp_path):
     assert read_q().count() == 5
 
 
-def test_salted_mode_drops_null_key_events(spark, tmp_path):
-    """Salted dedup is a pure groupBy (no semi-join side effect), so the
-    explicit null-key drop is what keeps garbage all-null rows out of the
-    merge (review finding)."""
+def test_shuffled_semijoin_drops_null_key_events(spark, tmp_path):
+    """The shuffled payload semi-join (broadcast_key_limit=0) is an
+    equi-join on the key columns, so null-key events never reach the merge
+    as garbage all-null or partial-null rows. The broadcast form is covered
+    by test_null_key_events_quarantined_and_counted."""
     import pyspark.sql.types as T
 
     sch = T.StructType(
@@ -618,7 +632,7 @@ def test_salted_mode_drops_null_key_events(spark, tmp_path):
     ]
     ev = spark.createDataFrame(rows, sch)
     eng = CdcEngine(spark, str(tmp_path / "t"), key_cols=("repo", "path"),
-                    num_buckets=2, salted=True)
+                    num_buckets=2, broadcast_key_limit=0)
     res = eng.replay(ev, max_lsn=3, epoch_size=10**9)[0]
     assert res.events == 1
     got = [(r.repo, r.path) for r in eng.read_state().collect()]

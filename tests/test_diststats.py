@@ -31,9 +31,7 @@ def _rows(spark, n, lo=0):
 
 
 def _force(monkeypatch, distributed: bool):
-    monkeypatch.setenv(
-        "SPARK_GRAFT_STATS_DIST_MIN_BYTES", "0" if distributed else str(1 << 60)
-    )
+    monkeypatch.setattr(diststats, "DIST_MIN_BYTES", 0 if distributed else 1 << 60)
 
 
 def _mk(spark, root, store=None, bloom=True, n=4000):
@@ -126,12 +124,12 @@ def test_distributed_blobs_go_through_the_store(spark, tmp_path, monkeypatch):
 
 
 def test_threshold_routes_small_commits_to_driver(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STATS_DIST_MIN_BYTES", str(1 << 60))
+    monkeypatch.setattr(diststats, "DIST_MIN_BYTES", 1 << 60)
     t = _mk(spark, str(tmp_path / "small"), n=50)
     assert not diststats.should_distribute(
         t, [{"path": p} for p in t.snapshot().files]
     )
-    monkeypatch.setenv("SPARK_GRAFT_STATS_DIST_MIN_BYTES", "1")
+    monkeypatch.setattr(diststats, "DIST_MIN_BYTES", 1)
     assert diststats.should_distribute(
         t, [{"path": p} for p in t.snapshot().files]
     )

@@ -1,21 +1,17 @@
 """Unit tests for Snowpark-semantics shims and vectorized text functions
 (SURVEY.md §5 item 1)."""
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from techtalk_data_pipeline_snowpark_spark.functions import (
-    canonicalize_content,
     canonicalize_content_sql,
     get_ignore_case,
     json_array_to_exploded_fields,
     lang_id,
-    normalize_lang,
+    normalize_and_canonicalize,
     normalize_lang_sql,
     quality_score,
-    sha256_hex,
-    sha256_hex_pandas,
     substring1,
     token_count,
     union_dedup,
@@ -59,38 +55,6 @@ def test_json_array_to_exploded_fields_case_insensitive(spark):
     assert [(r.orderCode, r.totPrice) for r in rows] == [("A1", 10.5), ("B2", 3.25)]
 
 
-def test_sha256_jvm_equals_pandas(spark):
-    df = spark.createDataFrame([("hello",), ("",), ("multi\nline",)], ["s"])
-    rows = df.select(
-        sha256_hex("s").alias("jvm"), sha256_hex_pandas(F.col("s")).alias("py")
-    ).collect()
-    for r in rows:
-        assert r.jvm == r.py
-
-
-def test_normalize_lang_pandas_equals_sql(spark):
-    vals = ["Python", "PY3", "Golang", "rs", " md ", "klingon", None]
-    df = spark.createDataFrame([(v,) for v in vals], ["lang"])
-    rows = df.select(
-        normalize_lang(F.col("lang")).alias("p"), normalize_lang_sql("lang").alias("s")
-    ).collect()
-    for r in rows:
-        assert r.p == r.s, (r.p, r.s)
-    assert rows[0].p == "python" and rows[2].p == "go" and rows[5].p == "unknown"
-
-
-def test_canonicalize_pandas_equals_sql(spark):
-    vals = ["a \r\nb\t\n", "x", "", "line1  \nline2\n\n\n"]
-    df = spark.createDataFrame([(v,) for v in vals], ["c"])
-    rows = df.select(
-        canonicalize_content(F.col("c")).alias("p"),
-        canonicalize_content_sql("c").alias("s"),
-    ).collect()
-    for r in rows:
-        assert r.p == r.s, (repr(r.p), repr(r.s))
-    assert rows[0].p == "a\nb\n"
-
-
 def test_token_count(spark):
     df = spark.createDataFrame([("a b  c",), ("",), ("  ",), ("one",)], ["t"])
     got = [r.n for r in df.select(token_count("t").alias("n")).collect()]
@@ -115,9 +79,7 @@ def test_lang_id_and_quality(spark):
 
 def test_fused_normalize_and_canonicalize_parity(spark):
     """The fused pyarrow-kernel UDF (CDC hot path) must be bit-identical to
-    the individual pandas UDFs and the JVM SQL expressions."""
-    from techtalk_data_pipeline_snowpark_spark.functions import normalize_and_canonicalize
-
+    the JVM SQL expressions, its parity oracle."""
     rows_in = [
         ("Python", "a \r\nb\t\n"),
         ("PY3", "x"),
@@ -125,18 +87,25 @@ def test_fused_normalize_and_canonicalize_parity(spark):
         (None, "line1  \nline2\n\n\n"),
         ("Golang", "no trailing newline"),
         ("rs", "tabs\t\t\nspaces   \nend\t \n \t"),
+        (" md ", "a \r\nb\t\n"),
+        ("python", "x"),
+        ("go", "y"),
+        ("unknown", "z"),
     ]
     df = spark.createDataFrame(rows_in, ["lang", "content"])
     got = df.select(
         normalize_and_canonicalize(F.col("lang"), F.col("content")).alias("t"),
-        normalize_lang(F.col("lang")).alias("l_ref"),
-        canonicalize_content(F.col("content")).alias("c_ref"),
         canonicalize_content_sql("content").alias("c_sql"),
         normalize_lang_sql("lang").alias("l_sql"),
     ).collect()
     for r in got:
-        assert r.t.lang == r.l_ref == r.l_sql, (r.t.lang, r.l_ref, r.l_sql)
-        assert r.t.content == r.c_ref == r.c_sql, (repr(r.t.content), repr(r.c_ref))
+        assert r.t.lang == r.l_sql, (r.t.lang, r.l_sql)
+        assert r.t.content == r.c_sql, (repr(r.t.content), repr(r.c_sql))
+    assert [r.t.lang for r in got] == [
+        "python", "python", "unknown", "unknown", "go", "rust",
+        "markdown", "python", "go", "unknown",
+    ]
+    assert got[0].t.content == "a\nb\n"
 
 
 def test_get_ignore_case_colliding_and_nested(spark):

@@ -112,7 +112,6 @@ def test_fuzz_multitable_crash_resume(spark, tmp_path, seed):
             key_cols=("user_id",),
             columns=["user_id", "value"],
             num_buckets=rng.choice([2, 4]),
-            engine_kwargs={"salted": rng.random() < 0.5},
         ),
     }
     root = str(tmp_path / "mt")

@@ -4,7 +4,7 @@ DIFFERENT epoch boundaries — final state must equal the pandas oracle
 exactly, per seed. The targeted test_cdc_engine cases each pin one
 guarantee; this fuzz layer checks their INTERACTIONS (e.g. a deletion-vector
 all-delete epoch followed by a restart that re-slices epoch boundaries over
-a bloom-enabled salted table)."""
+a bloom-enabled table)."""
 
 import random
 
@@ -55,7 +55,6 @@ def test_fuzz_crash_resume_duplicate_delivery(spark, tmp_path, seed):
     )
     cfg = dict(
         num_buckets=rng.choice([4, 8]),
-        salted=rng.random() < 0.5,
         bloom=rng.random() < 0.5,
     )
     if rng.random() < 0.34:

@@ -171,3 +171,15 @@ def test_plan_broadcast_ratio_and_partial_topk(spark):
     plan = formatted_plan(df)
     assert has_broadcast_hash_join(df)  # ≤B-row ratio table broadcasts
     assert "TakeOrderedAndProject" in plan  # map-side partial top-k cut
+
+
+def test_session_pins_ansi_so_decimal_overflow_raises(spark):
+    """session.py pins ANSI mode rather than inheriting Spark's default, so
+    the decimal(9,0) cast in dsir_select fails loudly on overflow instead
+    of yielding NULL."""
+    from techtalk_data_pipeline_snowpark_spark.session import _DEFAULTS
+
+    assert _DEFAULTS["spark.sql.ansi.enabled"] == "true"
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        spark.range(1).select(F.lit(10**9).cast("decimal(9,0)")).collect()
