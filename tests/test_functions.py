@@ -55,6 +55,38 @@ def test_json_array_to_exploded_fields_case_insensitive(spark):
     assert [(r.orderCode, r.totPrice) for r in rows] == [("A1", 10.5), ("B2", 3.25)]
 
 
+def test_normalize_lang_pandas_equals_sql(spark):
+    """The lang half of the fused Arrow UDF (the only pandas path left)
+    equals the JVM expression; content is absent, passed as a typed null."""
+    vals = ["Python", "PY3", "Golang", "rs", " md ", "klingon", None]
+    df = spark.createDataFrame([(v,) for v in vals], ["lang"])
+    rows = df.select(
+        normalize_and_canonicalize(F.col("lang"), F.lit(None).cast("string"))
+        .getField("lang")
+        .alias("p"),
+        normalize_lang_sql("lang").alias("s"),
+    ).collect()
+    for r in rows:
+        assert r.p == r.s, (r.p, r.s)
+    assert rows[0].p == "python" and rows[2].p == "go" and rows[5].p == "unknown"
+
+
+def test_canonicalize_pandas_equals_sql(spark):
+    """The content half of the fused Arrow UDF equals the JVM expression;
+    lang is absent, passed as a typed null."""
+    vals = ["a \r\nb\t\n", "x", "", "line1  \nline2\n\n\n"]
+    df = spark.createDataFrame([(v,) for v in vals], ["c"])
+    rows = df.select(
+        normalize_and_canonicalize(F.lit(None).cast("string"), F.col("c"))
+        .getField("content")
+        .alias("p"),
+        canonicalize_content_sql("c").alias("s"),
+    ).collect()
+    for r in rows:
+        assert r.p == r.s, (repr(r.p), repr(r.s))
+    assert rows[0].p == "a\nb\n"
+
+
 def test_token_count(spark):
     df = spark.createDataFrame([("a b  c",), ("",), ("  ",), ("one",)], ["t"])
     got = [r.n for r in df.select(token_count("t").alias("n")).collect()]
