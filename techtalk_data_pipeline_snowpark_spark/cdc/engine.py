@@ -450,23 +450,36 @@ class CdcEngine:
         )
         dedup = self._transform(deduped_raw)
 
+        # one manifest and one set of watermark properties for every commit
+        # this epoch makes; a 100%-malformed epoch must still report its dead
+        # letters
+        manifest = {
+            "epoch_id": epoch_id,
+            "lsn_from": lsn_from,
+            "lsn_to": lsn_to,
+            "partition_offsets": partition_offsets,
+            # the bucketing function the offset keys were computed under —
+            # consumers must NOT assume they match the table's file layout
+            # (they differ exactly when buckets_trusted is false)
+            "bucket_config": {
+                "num_buckets": self.num_buckets,
+                "key_cols": self.key_cols,
+                "matches_table_layout": buckets_trusted,
+            },
+            "lineage": lineage or {},
+            "null_key_winners": n_null_winners,
+            "quarantined_to": self.quarantine_dir if n_null_winners else None,
+            "committed_at": time.time(),
+        }
+        props = {
+            PROP_LAST_LSN: lsn_to,
+            PROP_EPOCH_ID: epoch_id,
+            "cdc.manifest": json.dumps(manifest),
+        }
         if n_events == 0:
-            res = table.commit_rewrite(
+            table.commit_rewrite(
                 [], [], "cdc-epoch",
-                properties={
-                    PROP_LAST_LSN: lsn_to, PROP_EPOCH_ID: epoch_id,
-                    "cdc.manifest": json.dumps(
-                        {"epoch_id": epoch_id, "lsn_from": lsn_from, "lsn_to": lsn_to,
-                         "partition_offsets": {}, "lineage": lineage or {},
-                         # a 100%-malformed epoch must still report its
-                         # dead letters — this branch IS that epoch
-                         "null_key_winners": n_null_winners,
-                         "quarantined_to": (
-                             self.quarantine_dir if n_null_winners else None
-                         ),
-                         "committed_at": time.time()}
-                    ),
-                },
+                properties=props,
                 summary={"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0},
                 expected_version=snap0.version + 1,
             )
@@ -486,36 +499,13 @@ class CdcEngine:
             )
             snap_for_merge = table.snapshot()
 
-        manifest = {
-            "epoch_id": epoch_id,
-            "lsn_from": lsn_from,
-            "lsn_to": lsn_to,
-            "partition_offsets": partition_offsets,
-            # the bucketing function the offset keys were computed under —
-            # consumers must NOT assume they match the table's file layout
-            # (they differ exactly when buckets_trusted is false)
-            "bucket_config": {
-                "num_buckets": self.num_buckets,
-                "key_cols": self.key_cols,
-                "matches_table_layout": buckets_trusted,
-            },
-            "lineage": lineage or {},
-            "null_key_winners": n_null_winners,
-            "quarantined_to": self.quarantine_dir if n_null_winners else None,
-            "committed_at": time.time(),
-        }
+        touched = [int(b) for b in partition_offsets] if buckets_trusted else None
         if n_delete_winners == n_events and snap_for_merge.files:
             # every winner is a delete → merge-on-read: a key-semi-join scan
             # of the touched buckets records the doomed (file, pos) pairs as
             # deletion vectors; zero surviving rows rewritten. The commit
             # still carries the epoch manifest + LSN watermark atomically;
             # compact() absorbs the DVs off the ingest path.
-            props = {
-                PROP_LAST_LSN: lsn_to,
-                PROP_EPOCH_ID: epoch_id,
-                "cdc.manifest": json.dumps(manifest),
-            }
-            tb = [int(b) for b in partition_offsets] if buckets_trusted else None
             # null-key winners can't address a row — keep them out of the
             # position scan
             res = mor_delete_keys(
@@ -524,7 +514,7 @@ class CdcEngine:
                 self.key_cols,
                 snap=snap_for_merge,
                 properties=props,
-                touched_buckets=tb,
+                touched_buckets=touched,
                 broadcast=n_events <= self.broadcast_key_limit,
             )
             return EpochResult(
@@ -539,14 +529,8 @@ class CdcEngine:
             when_matched_update="all",
             when_matched_delete=F.col("s.op") == "delete",
             when_not_matched_insert=True,
-            properties={
-                PROP_LAST_LSN: lsn_to,
-                PROP_EPOCH_ID: epoch_id,
-                "cdc.manifest": json.dumps(manifest),
-            },
-            touched_buckets=(
-                [int(b) for b in partition_offsets] if buckets_trusted else None
-            ),
+            properties=props,
+            touched_buckets=touched,
             snap=snap_for_merge,
         )
         return EpochResult(

@@ -58,6 +58,7 @@ from pyspark.sql import types as T
 from .bloom import PROP_BLOOM_COLS
 from .bloom import bloom_cols_of as _bloom_cols_of
 from .store import PosixStore, TableStore
+from .zorder import zorder_cuts, zorder_expr_from_cuts, zorder_slice_expr
 
 LOG_DIR = "_log"
 DATA_DIR = "data"
@@ -80,7 +81,9 @@ PROP_BUCKET_HASH = "lake.bucket_hash"
 #  "target_files": int}. Writers that rewrite whole buckets (MERGE /
 # UPDATE / DELETE) consult it via cluster_write_args() so the layout the
 # reads depend on SURVIVES the ingest loop instead of decaying until the
-# next compact.
+# next compact. An explicit compact(sort_by=...) builds the same spec
+# before staging, so explicit and persisted layouts go through one
+# planner (_layout_kwargs).
 PROP_CLUSTER_BY = "lake.cluster_by"
 # Branch lineage stamp, set by create_branch on the branch's seed commit:
 # the main-table version the branch forked from. publish_branch diffs the
@@ -140,6 +143,54 @@ def bucket_expr(key_cols: list[str], num_buckets: int, schema: T.StructType | No
                 col = col.cast("double")
         cols.append(col)
     return F.pmod(F.hash(*cols), F.lit(num_buckets))
+
+
+def _cluster_spec(snap, schema: T.StructType) -> dict | None:
+    """The persisted ``lake.cluster_by`` spec, or None when the table has
+    none or the schema drifted past it (a cluster column dropped) — writes
+    then fall back to unclustered rather than fail."""
+    raw = snap.properties.get(PROP_CLUSTER_BY)
+    if not raw:
+        return None
+    try:
+        spec = json.loads(raw)
+    except (TypeError, ValueError):
+        return None
+    cols = spec.get("cols") or []
+    names = {f.name.lower() for f in schema.fields}
+    if not cols or not all(c.lower() in names for c in cols):
+        return None
+    return spec
+
+
+def _layout_kwargs(spec: dict, schema: T.StructType, snap, removes) -> dict:
+    """Staging kwargs for one clustering spec — the one planner behind an
+    explicit ``compact(sort_by=...)`` and the persisted stamp.
+
+    Z-order rebuilds the curve from the spec's cut points (no quantile
+    rescan) and slices it at aligned prefixes into ``target_files``
+    subcubes. 1-D sorts in-task on the columns; a bucket sorts in ONE
+    task, so ``maxRecordsPerFile`` slices its run into range-disjoint
+    files, sized off the LARGEST rewritten bucket so skewed buckets still
+    respect the file target. An unbucketed write is range-partitioned
+    straight into ``target_files`` files instead."""
+    cols = spec["cols"]
+    tf = max(1, int(spec.get("target_files") or 1))
+    if spec.get("zorder"):
+        bits = int(spec["bits"])
+        z = zorder_expr_from_cuts(schema, cols, spec["cuts"], bits)
+        return {"sort_by": [z], "subpartition": zorder_slice_expr(z, len(cols), bits, tf)}
+    out: dict = {"sort_by": list(cols), "files_per_bucket": tf}
+    if tf > 1 and snap.num_buckets and removes:
+        rows_by_bucket: dict = {}
+        for p in removes:
+            m = snap.files.get(p) or {}
+            b = m.get("bucket")
+            rows_by_bucket[b] = rows_by_bucket.get(b, 0) + (m.get("rows") or 0)
+        biggest = max(rows_by_bucket.values(), default=0)
+        if biggest > 0:
+            out["max_records_per_file"] = -(-biggest // tf)
+    return out
 
 
 @dataclass
@@ -920,7 +971,11 @@ class LakeTable:
         range-DISJOINT files — the Delta ``OPTIMIZE ... ZORDER BY``
         one-dimensional shape. Disjoint ranges are what make the per-file
         zone maps (lake/stats.py) bite on non-key predicates: a selective
-        scan then opens ~1 file per bucket instead of all of them."""
+        scan then opens ~1 file per bucket instead of all of them.
+
+        An unbucketed table is one bucket with no ``_b`` partition column:
+        ``files_per_bucket`` is then its file count (range-partitioned when
+        sorted, coalesced when not; None keeps the input's partitioning)."""
         staging_rel = f".staging-{uuid.uuid4().hex}"
         staging = os.path.join(self.root, staging_rel)
         adds: list[dict] = []
@@ -930,10 +985,36 @@ class LakeTable:
         # pyarrow) reads it natively.
         self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         ordered = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        part: list[str] = []
         if num_buckets:
-            out = df.select(
-                *ordered, bucket_expr(key_cols, num_buckets, schema).alias("_b")
+            ordered.append(bucket_expr(key_cols, num_buckets, schema).alias("_b"))
+            part = ["_b"]
+        out = df.select(*ordered)
+        if sort_by and subpartition is not None:
+            # aligned multi-column clustering (zorder): shuffle by (bucket,
+            # z-slice) — each slice is an exact subcube of the value grid
+            # and lands in its own file (hash partitioning sends a (b, zs)
+            # group to exactly one task; partitionBy splits tasks per group
+            # → one file per slice)
+            zs, n_slices = subpartition
+            out = (
+                out.withColumn("_zs", zs)
+                .repartition((num_buckets or 1) * n_slices, *part, "_zs")
+                .sortWithinPartitions(*part, "_zs", *sort_by)
             )
+            part.append("_zs")
+        elif sort_by and num_buckets:
+            # one shuffle keyed by bucket, in-task sort on the cluster
+            # columns; maxRecordsPerFile slices the SORTED run, so the
+            # resulting files carry disjoint sort-key ranges
+            out = out.repartition(num_buckets, "_b").sortWithinPartitions("_b", *sort_by)
+        elif sort_by:
+            # range shuffle to an explicit file target, in-task sort:
+            # output files are range-disjoint on the cluster columns
+            out = out.repartitionByRange(
+                max(1, files_per_bucket or 1), *sort_by
+            ).sortWithinPartitions(*sort_by)
+        elif num_buckets:
             # One shuffle keyed by (bucket, salt). Write parallelism is NOT
             # capped at num_buckets: when the session has more task slots
             # than buckets, a per-key salt splits each bucket into
@@ -954,96 +1035,35 @@ class LakeTable:
                     slots,
                 )
                 files_per_bucket = max(1, min(par // num_buckets, 8))
-            if sort_by and subpartition is not None:
-                # aligned multi-column clustering (zorder): shuffle by
-                # (bucket, z-slice) — each slice is an exact subcube of the
-                # value grid and lands in its own file (hash partitioning
-                # sends a (b, zs) group to exactly one task; partitionBy
-                # splits tasks per group → one file per slice)
-                zs, n_slices = subpartition
-                (
-                    out.withColumn("_zs", zs)
-                    .repartition(num_buckets * n_slices, "_b", "_zs")
-                    .sortWithinPartitions("_b", "_zs", *sort_by)
-                    .write.partitionBy("_b", "_zs")
-                    .mode("overwrite")
-                    .parquet(staging)
-                )
-            elif sort_by:
-                # one shuffle keyed by bucket, in-task sort on the cluster
-                # columns; maxRecordsPerFile slices the SORTED run, so the
-                # resulting files carry disjoint sort-key ranges
-                writer = (
-                    out.repartition(num_buckets, "_b")
-                    .sortWithinPartitions("_b", *sort_by)
-                    .write
-                )
-                if max_records_per_file:
-                    writer = writer.option(
-                        "maxRecordsPerFile", int(max_records_per_file)
-                    )
-                writer.partitionBy("_b").mode("overwrite").parquet(staging)
-            elif files_per_bucket > 1:
+            if files_per_bucket > 1:
                 salt = F.pmod(
                     F.xxhash64(*[F.col(c) for c in key_cols]),
                     F.lit(files_per_bucket),
                 )
-                out.repartition(
-                    num_buckets * files_per_bucket, F.col("_b"), salt
-                ).write.partitionBy("_b").mode("overwrite").parquet(staging)
+                out = out.repartition(num_buckets * files_per_bucket, F.col("_b"), salt)
             else:
-                writer = out.repartition(num_buckets, "_b").write
-                if max_records_per_file:
-                    writer = writer.option(
-                        "maxRecordsPerFile", int(max_records_per_file)
-                    )
-                writer.partitionBy("_b").mode("overwrite").parquet(staging)
-            # recursive walk handles both flat `_b=X/*.parquet` layouts and
-            # the zorder write's nested `_b=X/_zs=Y/*.parquet`
-            moves: list[tuple[str, str]] = []
-            for rel_f in self.store.walk_files(staging_rel):
-                parts = rel_f.split("/")
-                if not parts[-1].endswith(".parquet"):
-                    continue
-                bseg = next((s for s in parts if s.startswith("_b=")), None)
-                if bseg is None:
-                    continue
-                b = int(bseg.split("=")[1])
-                rel = f"{DATA_DIR}/b={b}/{uuid.uuid4().hex}.parquet"
-                moves.append((rel_f, rel))
-                adds.append({"path": rel, "bucket": b})
-            self.store.finalize(moves)
-        else:
-            flat = df.select(*ordered)
-            part_cols: list[str] = []
-            if sort_by and subpartition is not None:
-                # aligned z-slices, one file per slice (see bucketed path)
-                zs, n_slices = subpartition
-                flat = (
-                    flat.withColumn("_zs", zs)
-                    .repartition(n_slices, "_zs")
-                    .sortWithinPartitions("_zs", *sort_by)
-                )
-                part_cols = ["_zs"]
-            elif sort_by:
-                # range shuffle to an explicit file target, in-task sort:
-                # output files are range-disjoint on the cluster columns
-                flat = flat.repartitionByRange(
-                    max(1, files_per_bucket or 1), *sort_by
-                ).sortWithinPartitions(*sort_by)
-            writer = flat.write
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-            writer.mode("overwrite").parquet(staging)
-            moves = []
-            for rel_f in self.store.walk_files(staging_rel):
-                if rel_f.split("/")[-1].endswith(".parquet"):
-                    rel = f"{DATA_DIR}/{uuid.uuid4().hex}.parquet"
-                    moves.append((rel_f, rel))
-                    adds.append({"path": rel, "bucket": None})
-            self.store.finalize(moves)
+                out = out.repartition(num_buckets, "_b")
+        elif files_per_bucket:
+            out = out.coalesce(files_per_bucket)
+        writer = out.write
+        if part:
+            writer = writer.partitionBy(*part)
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        writer.mode("overwrite").parquet(staging)
+        # recursive walk handles flat, `_b=X/` and the zorder write's
+        # nested `[_b=X/]_zs=Y/` layouts
+        moves: list[tuple[str, str]] = []
+        for rel_f in self.store.walk_files(staging_rel):
+            parts = rel_f.split("/")
+            b = next((int(seg[3:]) for seg in parts if seg.startswith("_b=")), None)
+            if not parts[-1].endswith(".parquet") or (num_buckets and b is None):
+                continue
+            sub = "" if b is None else f"b={b}/"
+            rel = f"{DATA_DIR}/{sub}{uuid.uuid4().hex}.parquet"
+            moves.append((rel_f, rel))
+            adds.append({"path": rel, "bucket": b})
+        self.store.finalize(moves)
         self.store.delete_dir(staging_rel)
         # zone maps + blooms ride the add-entries so every snapshot can prune
         # mutations/scans driver-side (lake/stats.py, lake/bloom.py). Big
@@ -1230,7 +1250,7 @@ class LakeTable:
         (the snapshot diff cancels exactly), so stream consumers are
         unaffected. A long CDC tail runs this periodically; at 100 TB it
         is the same touched-bucket-scoped rewrite a merge does, minus the
-        join.
+        join. An unbucketed table is planned the same way, as one bucket.
 
         ``sort_by`` turns this into ``OPTIMIZE ... ZORDER BY``'s
         one-dimensional cousin: EVERY file is rewritten with rows clustered
@@ -1250,6 +1270,11 @@ class LakeTable:
         1-D sort makes the first column prune perfectly and the others not
         at all; z-order makes them ALL prune at ~sqrt rates — the right
         trade whenever the workload filters on more than one column.
+
+        The explicit request is laid out as a ``lake.cluster_by`` spec
+        built before staging, and a compact without ``sort_by`` keeps the
+        table's persisted spec: both go through one planner
+        (``_layout_kwargs``, which ``cluster_write_args`` also serves).
 
         ``bin_pack_rows=N`` switches the victim policy from file-COUNT to
         file-SIZE (Delta ``OPTIMIZE``'s bin-packing): only files smaller
@@ -1271,7 +1296,7 @@ class LakeTable:
                 "(sort_by/zorder) rewrites every file — use one or the other"
             )
 
-        def _bin_victims(paths: list[str], files: dict) -> list[str]:
+        def _bin_victims(paths: list[str]) -> list[str]:
             """Files worth rewriting under the size policy: sub-target or
             tombstone-carrying (missing row stats count as sub-target —
             one rewrite gains them). Returns [] when merging wouldn't
@@ -1279,181 +1304,69 @@ class LakeTable:
             smalls = [
                 p
                 for p in paths
-                if ((files[p] or {}).get("rows") or 0) < bin_pack_rows
-                or (files[p] or {}).get("dv")
+                if ((snap.files[p] or {}).get("rows") or 0) < bin_pack_rows
+                or (snap.files[p] or {}).get("dv")
             ]
-            has_refs = any((files[p] or {}).get("dv") for p in smalls)
+            has_refs = any((snap.files[p] or {}).get("dv") for p in smalls)
             return smalls if (len(smalls) >= 2 or has_refs) else []
 
         snap = self.snapshot()
-        total_rows = sum((m or {}).get("rows") or 0 for m in snap.files.values())
-        summary_stamped = False
-
-        def _stamp_target() -> int:
-            """Per-bucket file target the persisted clustering stamp was
-            written with — its range-disjoint slices are layout, not
-            fragmentation, so the count policy must not treat a freshly
-            stamped bucket as a victim (or every compact() rewrites the
-            whole stamped table forever)."""
-            try:
-                return max(
-                    1,
-                    int(
-                        json.loads(snap.properties[PROP_CLUSTER_BY]).get(
-                            "target_files"
-                        )
-                        or 1
-                    ),
-                )
-            except (KeyError, TypeError, ValueError):
-                return 1
-
-        if snap.num_buckets:
-            by_bucket: dict[int, list[str]] = {}
-            for p, m in snap.files.items():
-                by_bucket.setdefault(m.get("bucket"), []).append(p)
+        by_bucket: dict = {}  # unbucketed: one group, keyed None
+        for p, m in snap.files.items():
+            by_bucket.setdefault(m.get("bucket"), []).append(p)
+        # no explicit clustering asked: keep the PERSISTED layout instead of
+        # un-sorting the victims — a maintenance pass must not undo what DML
+        # preserves
+        stamp = None if sort_by else _cluster_spec(snap, snap.schema)
+        if sort_by:
+            victims = list(snap.files)  # clustering rewrites everything
+        elif bin_pack_rows:
+            victims = [p for paths in by_bucket.values() for p in _bin_victims(paths)]
+        else:
             # a bucket is a victim when over the file target OR any of its
             # files carries deletion vectors — compact absorbs DVs (the
             # DV-filtered read materializes live rows only; the refs die
-            # with the removed files)
-            if sort_by:
-                victims = list(snap.files)  # clustering rewrites everything
-            elif bin_pack_rows:
-                victims = [
-                    p
-                    for paths in by_bucket.values()
-                    for p in _bin_victims(paths, snap.files)
-                ]
-            else:
-                target = max_files_per_bucket
-                if self.cluster_write_args(snap):
-                    target = max(target, _stamp_target())
-                victims = [
-                    p
-                    for b, paths in by_bucket.items()
-                    if len(paths) > target
-                    or any(snap.files[p].get("dv") for p in paths)
-                    for p in paths
-                ]
-            if not victims:
-                return CommitResult(version=snap.version, summary={"files_compacted": 0})
-            df = self._read_files(victims, snap.schema, files_meta=snap.files)
-            sort_exprs = sort_by
-            subpartition = None
-            cluster_cuts = None
-            if zorder and sort_by:
-                from .zorder import (
-                    zorder_cuts,
-                    zorder_expr_from_cuts,
-                    zorder_slice_expr,
-                )
-
-                cluster_cuts = zorder_cuts(df, sort_by, zorder_bits)
-                zcol = zorder_expr_from_cuts(
-                    snap.schema, sort_by, cluster_cuts, zorder_bits
-                )
-                sort_exprs = [zcol]
-                subpartition = zorder_slice_expr(
-                    zcol, len(sort_by), zorder_bits, max_files_per_bucket
-                )
-            mrpf = bin_pack_rows or None
-            if sort_by and not zorder and max_files_per_bucket > 1 and total_rows:
-                # size the slice off the LARGEST bucket so skewed buckets
-                # still respect the per-bucket file cap
-                rows_by_bucket: dict[int, int] = {}
-                for m in snap.files.values():
-                    b = (m or {}).get("bucket")
-                    rows_by_bucket[b] = rows_by_bucket.get(b, 0) + ((m or {}).get("rows") or 0)
-                mrpf = -(-max(rows_by_bucket.values()) // max_files_per_bucket)
-            if not sort_by:
-                # no explicit clustering asked: keep the PERSISTED layout
-                # (lake.cluster_by) instead of un-sorting the victims — a
-                # maintenance pass must not undo what DML preserves. Bin-
-                # packing keeps its row-target splitting (merged smalls are
-                # sorted but split by size, not by z-subcube).
-                stamp = self.cluster_write_args(snap, removes=victims)
-                if stamp:
-                    sort_exprs = stamp["sort_by"]
-                    subpartition = stamp.get("subpartition")
-                    if bin_pack_rows:
-                        subpartition = None
-                    else:
-                        mrpf = stamp.get("max_records_per_file")
-                    summary_stamped = True
-            adds = self._stage_dataframe(
-                df,
-                snap.schema,
-                snap.num_buckets,
-                snap.key_cols,
-                files_per_bucket=1,
-                sort_by=sort_exprs,
-                max_records_per_file=mrpf,
-                subpartition=subpartition,
-                bloom_cols=_bloom_cols_of(snap),
-            )
-        else:
-            if bin_pack_rows:
-                victims = _bin_victims(list(snap.files), snap.files)
-            else:
-                victims = list(snap.files)
-            stamp = {} if sort_by else self.cluster_write_args(snap, removes=victims)
+            # with the removed files). The stamp's range-disjoint slices are
+            # layout, not fragmentation: a freshly stamped bucket is no
+            # victim (or every compact() rewrites the stamped table forever)
             target = max_files_per_bucket
             if stamp:
-                target = max(target, _stamp_target())
-            has_dv = any((snap.files[p] or {}).get("dv") for p in victims)
-            if not victims or (
-                not sort_by
-                and not bin_pack_rows
-                and len(victims) <= target
-                and not has_dv
-            ):
-                return CommitResult(version=snap.version, summary={"files_compacted": 0})
-            df = self._read_files(victims, snap.schema, files_meta=snap.files)
-            if not sort_by and not stamp:
-                df = df.coalesce(1)
-            sort_exprs = sort_by
-            subpartition = None
-            cluster_cuts = None
-            files_per_bucket = max_files_per_bucket
-            mrpf = bin_pack_rows or None
-            if stamp:
-                # keep the persisted layout (see the bucketed branch)
-                sort_exprs = stamp["sort_by"]
-                subpartition = stamp.get("subpartition")
-                if bin_pack_rows:
-                    subpartition = None
-                else:
-                    files_per_bucket = stamp.get("files_per_bucket") or target
-                    mrpf = stamp.get("max_records_per_file")
-                summary_stamped = True
-            if zorder and sort_by:
-                from .zorder import (
-                    zorder_cuts,
-                    zorder_expr_from_cuts,
-                    zorder_slice_expr,
-                )
-
-                cluster_cuts = zorder_cuts(df, sort_by, zorder_bits)
-                zcol = zorder_expr_from_cuts(
-                    snap.schema, sort_by, cluster_cuts, zorder_bits
-                )
-                sort_exprs = [zcol]
-                subpartition = zorder_slice_expr(
-                    zcol, len(sort_by), zorder_bits, max_files_per_bucket
-                )
-            adds = self._stage_dataframe(
-                df,
-                snap.schema,
-                None,
-                [],
-                files_per_bucket=files_per_bucket,
-                sort_by=sort_exprs,
-                subpartition=subpartition,
-                bloom_cols=_bloom_cols_of(snap),
-                max_records_per_file=mrpf,
-            )
+                target = max(target, int(stamp.get("target_files") or 1))
+            victims = [
+                p
+                for paths in by_bucket.values()
+                if len(paths) > target or any(snap.files[p].get("dv") for p in paths)
+                for p in paths
+            ]
+        if not victims:
+            return CommitResult(version=snap.version, summary={"files_compacted": 0})
+        df = self._read_files(victims, snap.schema, files_meta=snap.files)
+        spec = stamp
+        if sort_by:
+            spec = {
+                "cols": list(sort_by),
+                "zorder": bool(zorder),
+                "target_files": int(max_files_per_bucket),
+            }
+            if zorder:
+                spec["bits"] = int(zorder_bits)
+                spec["cuts"] = zorder_cuts(df, sort_by, zorder_bits)
+        layout = _layout_kwargs(spec, snap.schema, snap, victims) if spec else {}
+        if bin_pack_rows:
+            # merged smalls keep the stamp's sort order but split by the
+            # row target, not by z-subcube
+            layout = {"sort_by": layout.get("sort_by"), "max_records_per_file": bin_pack_rows}
+        adds = self._stage_dataframe(
+            df,
+            snap.schema,
+            snap.num_buckets,
+            snap.key_cols,
+            files_per_bucket=layout.pop("files_per_bucket", 1),
+            bloom_cols=_bloom_cols_of(snap),
+            **layout,
+        )
         summary = {"files_compacted": len(victims), "files_written": len(adds)}
-        if summary_stamped:
+        if stamp:
             summary["clustering_preserved"] = True
         properties = None
         if sort_by:
@@ -1465,14 +1378,6 @@ class LakeTable:
                 # UPDATE / DELETE, via cluster_write_args) keep it — the
                 # z-order grid travels as its cut points, so no writer
                 # ever pays the quantile scan again
-                spec: dict = {
-                    "cols": list(sort_by),
-                    "zorder": bool(zorder),
-                    "target_files": int(max_files_per_bucket),
-                }
-                if zorder:
-                    spec["bits"] = int(zorder_bits)
-                    spec["cuts"] = cluster_cuts
                 properties = {PROP_CLUSTER_BY: json.dumps(spec)}
         if bin_pack_rows:
             summary["bin_pack_rows"] = int(bin_pack_rows)
@@ -1512,44 +1417,9 @@ class LakeTable:
         The cost is one in-task external sort of data the rewrite was
         writing anyway. If the schema drifted past the stamp (a cluster
         column dropped), writes fall back to unclustered rather than fail."""
-        raw = snap.properties.get(PROP_CLUSTER_BY)
-        if not raw:
-            return {}
-        try:
-            spec = json.loads(raw)
-        except (TypeError, ValueError):
-            return {}
         schema = schema if schema is not None else snap.schema
-        cols = spec.get("cols") or []
-        names = {f.name.lower() for f in schema.fields}
-        if not cols or not all(c.lower() in names for c in cols):
-            return {}
-        tf = max(1, int(spec.get("target_files") or 1))
-        if spec.get("zorder"):
-            from .zorder import zorder_expr_from_cuts, zorder_slice_expr
-
-            z = zorder_expr_from_cuts(
-                schema, cols, spec["cuts"], int(spec["bits"])
-            )
-            return {
-                "sort_by": [z],
-                "subpartition": zorder_slice_expr(
-                    z, len(cols), int(spec["bits"]), tf
-                ),
-            }
-        out: dict = {"sort_by": list(cols), "files_per_bucket": tf}
-        if tf > 1 and removes:
-            # size the slice off the largest REWRITTEN bucket, mirroring
-            # the clustered compact's skew rule
-            rows_by_bucket: dict = {}
-            for p in removes:
-                m = snap.files.get(p) or {}
-                b = m.get("bucket")
-                rows_by_bucket[b] = rows_by_bucket.get(b, 0) + (m.get("rows") or 0)
-            biggest = max(rows_by_bucket.values(), default=0)
-            if biggest > 0:
-                out["max_records_per_file"] = -(-biggest // tf)
-        return out
+        spec = _cluster_spec(snap, schema)
+        return _layout_kwargs(spec, schema, snap, removes) if spec else {}
 
     def rebucket(self, num_buckets: int) -> CommitResult:
         """Bucket-count evolution (Iceberg partition-spec evolution, scoped

@@ -150,8 +150,16 @@ def test_pandas_udfs_equal_jvm_oracle(spark, tmp_path, drop):
     """The fused Arrow UDF and the JVM expressions (use_pandas_udfs=False,
     the parity oracle) give an identical final state for every log shape:
     both transform columns, and each one alone (the absent column goes into
-    the fused UDF as a typed null and its output is dropped)."""
-    ev = change_events(spark, 300, n_repos=5, paths_per_repo=10, seed=23).drop(*drop)
+    the fused UDF as a typed null and its output is dropped). An upsert
+    with null content keeps null content and a null content_sha256."""
+    from datetime import datetime
+
+    ev = change_events(spark, 300, n_repos=5, paths_per_repo=10, seed=23)
+    null_content = spark.createDataFrame(
+        [(301, "insert", "repo-null", "null.py", "c0", "py", None, datetime(2026, 1, 1))],
+        ev.schema,
+    )
+    ev = ev.unionByName(null_content).drop(*drop)
     states = []
     for pandas_udfs in (True, False):
         eng = CdcEngine(spark, str(tmp_path / f"p{pandas_udfs}"), num_buckets=4,
@@ -164,6 +172,10 @@ def test_pandas_udfs_equal_jvm_oracle(spark, tmp_path, drop):
     assert not set(drop) & set(fused.columns)
     assert ("content_sha256" in fused.columns) == ("content" not in drop)
     _assert_state_equal(fused, jvm)
+    if "content" not in drop:
+        row = fused[fused.path == "null.py"]
+        assert len(row) == 1 and row.content.isna().all()
+        assert row.content_sha256.isna().all()
 
 
 def test_dedup_variants_agree(spark):
@@ -607,6 +619,8 @@ def test_null_key_events_quarantined_and_counted(spark, tmp_path):
     assert m3["null_key_winners"] == 2
     assert m3["quarantined_to"] == qdir
     assert read_q().count() == 5
+    # one manifest shape for every epoch, the all-null-key one included
+    assert len({frozenset(m) for m in eng.manifests()}) == 1
 
 
 def test_shuffled_semijoin_drops_null_key_events(spark, tmp_path):

@@ -73,8 +73,8 @@ def test_normalize_lang_pandas_equals_sql(spark):
 
 def test_canonicalize_pandas_equals_sql(spark):
     """The content half of the fused Arrow UDF equals the JVM expression;
-    lang is absent, passed as a typed null."""
-    vals = ["a \r\nb\t\n", "x", "", "line1  \nline2\n\n\n"]
+    lang is absent, passed as a typed null. Null content stays null."""
+    vals = ["a \r\nb\t\n", "x", "", "line1  \nline2\n\n\n", None]
     df = spark.createDataFrame([(v,) for v in vals], ["c"])
     rows = df.select(
         normalize_and_canonicalize(F.lit(None).cast("string"), F.col("c"))
@@ -123,6 +123,7 @@ def test_fused_normalize_and_canonicalize_parity(spark):
         ("python", "x"),
         ("go", "y"),
         ("unknown", "z"),
+        ("py", None),
     ]
     df = spark.createDataFrame(rows_in, ["lang", "content"])
     got = df.select(
@@ -135,7 +136,7 @@ def test_fused_normalize_and_canonicalize_parity(spark):
         assert r.t.content == r.c_sql, (repr(r.t.content), repr(r.c_sql))
     assert [r.t.lang for r in got] == [
         "python", "python", "unknown", "unknown", "go", "rust",
-        "markdown", "python", "go", "unknown",
+        "markdown", "python", "go", "unknown", "python",
     ]
     assert got[0].t.content == "a\nb\n"
 
